@@ -1255,7 +1255,7 @@ def q_series_diff(spark, sf_dir) -> DataFrame:
 def q_series_cumsum(spark, sf_dir) -> DataFrame:
     """pandas Series.cumsum over the global index order — windowless at
     scale: position buckets + one balanced hash exchange + driver
-    prefix-sum of bucket totals (with_global_cumsum). Integer column so
+    prefix-sum of bucket totals (with_global_cumagg). Integer column so
     the running sum is exact on both engines."""
     o = _t(spark, sf_dir, "orders", "o_orderkey")
     out = o["o_custkey"].cumsum().to_spark()
@@ -6433,7 +6433,7 @@ def _groupby_rolling_apply_oracle_sql() -> str:
 def q_frame_expanding(spark, sf_dir) -> DataFrame:
     """DataFrame.expanding(): running mean/std/count for EVERY numeric
     column through one shared bucket-prefix exchange
-    (operators/ranking.with_global_expanding_multi); std uses the
+    (operators/ranking.with_global_expanding); std uses the
     mean-shifted double moments, so values match DuckDB's stable
     stddev_samp window to rounding."""
     o = _t(spark, sf_dir, "orders", "o_orderkey")
@@ -7280,12 +7280,12 @@ def q_rolling_skew_kurt(spark, sf_dir) -> DataFrame:
         "o_orderkey", F.col("o_totalprice").cast("double").alias("v")
     )
     out = with_global_rolling(
-        base, ["o_orderkey"], "v", 7, ["skew", "kurt"], min_periods=4
+        base, ["o_orderkey"], ["v"], 7, ["skew", "kurt"], min_periods=4
     )
     return out.select(
         "o_orderkey",
-        F.round("rolling_skew", 6).alias("rolling_skew"),
-        F.round("rolling_kurt", 6).alias("rolling_kurt"),
+        F.round("v__rolling_skew", 6).alias("rolling_skew"),
+        F.round("v__rolling_kurt", 6).alias("rolling_kurt"),
     )
 
 
@@ -7352,12 +7352,12 @@ def q_expanding_skew_kurt(spark, sf_dir) -> DataFrame:
         "o_orderkey", F.col("o_totalprice").cast("double").alias("v")
     )
     out = with_global_expanding(
-        base, ["o_orderkey"], "v", ["skew", "kurt"], min_periods=1
+        base, ["o_orderkey"], ["v"], ["skew", "kurt"], min_periods=1
     )
     return out.select(
         "o_orderkey",
-        F.round("expanding_skew", 6).alias("expanding_skew"),
-        F.round("expanding_kurt", 6).alias("expanding_kurt"),
+        F.round("v__expanding_skew", 6).alias("expanding_skew"),
+        F.round("v__expanding_kurt", 6).alias("expanding_kurt"),
     )
 
 

@@ -608,7 +608,9 @@ def _vs_committed(timings: dict, prior_times: dict) -> dict:
     common = [
         (name, prior_times[name], now)
         for name, now in timings.items()
-        if prior_times.get(name)
+        # explicit: a committed 0.0 s (no ratio defined) is a deliberate
+        # skip, not a falsy accident that looks like a missing query
+        if name in prior_times and prior_times[name] > 0
     ]
     if not common:
         return {"n_common": 0}

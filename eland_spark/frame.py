@@ -1722,9 +1722,11 @@ class DataFrame:
     # ------------------------------------------------------------------
     # frame-wide global-order ops (pandas surface; windowless plans)
     # ------------------------------------------------------------------
-    def _order_base(self, numeric_only: bool):
+    def _order_base(self, numeric_only: bool, double: bool = False):
         """(sdf with index + target cols aliased to display names,
-        index names, value names) for the frame-wide order ops."""
+        index names, value names) for the frame-wide order ops;
+        ``double`` casts the value columns (rolling/expanding/ewm
+        return floats for every input dtype, like pandas)."""
         icols = list(self.index_cols)
         if not icols:
             raise ValueError("frame order ops need an index for a total order")
@@ -1742,83 +1744,58 @@ class DataFrame:
         if not vals:
             raise ValueError("no applicable columns")
         sel = [F.col(schema.resolve_any(c)).alias(c) for c in icols] + [
-            F.col(schema.resolve(c)).alias(c) for c in vals
+            (
+                F.col(schema.resolve(c)).cast("double")
+                if double
+                else F.col(schema.resolve(c))
+            ).alias(c)
+            for c in vals
         ]
         return self._sdf.select(*sel), icols, vals
 
     def shift(self, periods: int = 1) -> "DataFrame":
         """pandas ``DataFrame.shift`` over the global index order: ONE
         rank pass + ONE position self-join carries every column
-        (operators/ranking.with_global_shift_multi) — balanced hash
-        shuffle on the dense position key, no single-partition
-        window."""
-        from .operators.ranking import with_global_shift_multi
-
-        base, icols, vals = self._order_base(numeric_only=False)
-        out = with_global_shift_multi(base, icols, vals, periods)
-        sel = [F.col(c) for c in icols] + [
-            F.col(f"{c}__prev__").alias(c) for c in vals
-        ]
-        return DataFrame(out.select(*sel), index_cols=tuple(icols))
+        (operators/ranking.with_global_shift) — balanced hash shuffle
+        on the dense position key, no single-partition window."""
+        return self._order_op("shift", periods)
 
     def diff(self, periods: int = 1) -> "DataFrame":
         """pandas ``DataFrame.diff`` (numeric columns) — same
         one-join multi-column plan as :meth:`shift`."""
-        from .operators.ranking import with_global_shift_multi
-
-        base, icols, vals = self._order_base(numeric_only=True)
-        out = with_global_shift_multi(base, icols, vals, periods)
-        sel = [F.col(c) for c in icols] + [
-            (F.col(c) - F.col(f"{c}__prev__")).alias(c) for c in vals
-        ]
-        return DataFrame(out.select(*sel), index_cols=tuple(icols))
+        return self._order_op("diff", periods)
 
     def pct_change(self, periods: int = 1) -> "DataFrame":
         """pandas ``DataFrame.pct_change`` (numeric columns) — IEEE
         division (prev 0 -> ±inf, not an ANSI error)."""
-        from .operators.ranking import with_global_shift_multi
-        from .series import Series
+        return self._order_op("pct_change", periods)
 
-        base, icols, vals = self._order_base(numeric_only=True)
-        out = with_global_shift_multi(base, icols, vals, periods)
-        sel = [F.col(c) for c in icols] + [
-            (Series._ieee_div(F.col(c), F.col(f"{c}__prev__")) - 1).alias(c)
-            for c in vals
-        ]
-        return DataFrame(out.select(*sel), index_cols=tuple(icols))
-
-    def _frame_cumagg(self, agg: str) -> "DataFrame":
-        from .operators.ranking import with_global_cumagg_multi
-
-        base, icols, vals = self._order_base(numeric_only=True)
-        pairs = [(c, agg, f"__o_{c}__") for c in vals]
-        out = with_global_cumagg_multi(base, icols, pairs)
-        sel = [F.col(c) for c in icols] + [
-            F.col(f"__o_{c}__").alias(c) for c in vals
-        ]
-        return DataFrame(out.select(*sel), index_cols=tuple(icols))
+    def _order_op(self, how: str, periods: int = 1) -> "DataFrame":
+        base, icols, vals = self._order_base(numeric_only=how != "shift")
+        out = _global_order_op(base, icols, vals, how, periods)
+        return DataFrame(out, index_cols=tuple(icols))
 
     def cumsum(self) -> "DataFrame":
         """pandas ``DataFrame.cumsum`` (numeric columns, skipna):
         every column through ONE windowless bucket plan — one balanced
         exchange + a driver prefix-combine of per-bucket totals
-        (operators/ranking.with_global_cumagg_multi)."""
-        return self._frame_cumagg("sum")
+        (operators/ranking.with_global_cumagg)."""
+        return self._order_op("cumsum")
 
     def cummax(self) -> "DataFrame":
         """pandas ``DataFrame.cummax`` — same multi-column bucket plan."""
-        return self._frame_cumagg("max")
+        return self._order_op("cummax")
 
     def cummin(self) -> "DataFrame":
         """pandas ``DataFrame.cummin`` — same multi-column bucket plan."""
-        return self._frame_cumagg("min")
+        return self._order_op("cummin")
 
     def cumprod(self) -> "DataFrame":
         """pandas ``DataFrame.cumprod`` (numeric, skipna) — the same
         multi-column bucket plan with a TRUE running product
         (``F.product`` within buckets, driver prefix-multiply across
         them): zeros and signs exact, no log/exp detour."""
-        return self._frame_cumagg("prod")
+        return self._order_op("cumprod")
 
     def ffill(self) -> "DataFrame":
         """pandas ``DataFrame.ffill`` over the global index order:
@@ -2536,7 +2513,7 @@ class DataFrame:
         order: lazy proxy with ``sum/mean/min/max/count/std/var/agg`` applying
         to every numeric column in ONE pass — the same windowless
         bucket-overlap plan as ``Series.rolling``
-        (operators/ranking.with_global_rolling_multi), one balanced
+        (operators/ranking.with_global_rolling), one balanced
         exchange for the whole column set, never one per column."""
         return _FrameRolling(self, window, min_periods)
 
@@ -2544,7 +2521,7 @@ class DataFrame:
         """pandas ``DataFrame.expanding()`` over the global index
         order: lazy proxy with ``sum/mean/min/max/count/std/var/agg``
         applying to every numeric column in ONE pass —
-        operators/ranking.with_global_expanding_multi shares one
+        operators/ranking.with_global_expanding shares one
         bucket-prefix exchange (and one all-columns centers agg for
         std/var's mean-shifted moments) across the whole column set,
         never one plan per column."""
@@ -2560,9 +2537,10 @@ class DataFrame:
     ):
         """pandas ``DataFrame.ewm(...)`` over the global index order:
         lazy proxy with ``.mean()`` applying to every numeric column in
-        ONE bucket-overlap pass — the truncated-kernel plan of
-        ``Series.ewm`` (operators/windowed.ewm_mean_global), the single
-        balanced exchange shared by the whole column set."""
+        ONE bucket-overlap pass — the truncated-kernel global ewm
+        kernel ``Series.ewm`` shares (operators/windowed.ewm_global,
+        same engine choice), the single balanced exchange shared by the
+        whole column set."""
         return _FrameEwm(self, alpha, span, halflife, com, min_periods)
 
     def corrwith(self, other: "DataFrame", numeric_only: bool = True) -> pd.Series:
@@ -3701,6 +3679,60 @@ def get_dummies(df: "DataFrame", columns=None, **kw) -> "DataFrame":
     return df.get_dummies(columns=columns, **kw)
 
 
+def _global_order_op(
+    base: SparkDataFrame, icols: list, vals: list, how: str, periods: int = 1
+) -> SparkDataFrame:
+    """shift/diff/pct_change/cumsum/cummax/cummin/cumprod of every
+    column in ``vals`` over the global ``icols`` order — the ONE place
+    the Frame and Series fronts turn the shift and cumagg kernels
+    (operators/ranking) into pandas results. Returns ``icols`` plus
+    each value column overwritten with its result. pct_change divides
+    with IEEE semantics (prev 0 -> ±inf, 0/0 -> NaN) instead of
+    raising ``DIVIDE_BY_ZERO`` under ANSI."""
+    from .operators.ranking import with_global_cumagg, with_global_shift
+    from .series import Series
+
+    if how.startswith("cum"):
+        out = with_global_cumagg(
+            base, icols, [(c, how[3:], f"{c}__cum__") for c in vals]
+        )
+        res = {c: F.col(f"{c}__cum__") for c in vals}
+    else:
+        out = with_global_shift(base, icols, vals, periods)
+        prev = {c: F.col(f"{c}__prev__") for c in vals}
+        if how == "shift":
+            res = prev
+        elif how == "diff":
+            res = {c: F.col(c) - prev[c] for c in vals}
+        else:
+            res = {
+                c: Series._ieee_div(F.col(c), prev[c]) - 1 for c in vals
+            }
+    return out.select(
+        *[F.col(c) for c in icols], *[res[c].alias(c) for c in vals]
+    )
+
+
+def _check_aggs(func, allowed: tuple, kind: str) -> list:
+    aggs = [func] if isinstance(func, str) else list(func)
+    for a in aggs:
+        if a not in allowed:
+            raise ValueError(f"unsupported {kind} agg {a!r}; one of {allowed}")
+    return aggs
+
+
+def _agg_frame(out, icols: list, vals: list, aggs: list, kind: str):
+    """Frame-level rolling/expanding result: one column per (col, agg),
+    named ``col`` for a single agg and ``col_agg`` otherwise."""
+    single = len(aggs) == 1
+    keep = [F.col(c) for c in icols] + [
+        F.col(f"{c}__{kind}_{a}").alias(c if single else f"{c}_{a}")
+        for c in vals
+        for a in aggs
+    ]
+    return DataFrame(out.select(*keep), index_cols=tuple(icols))
+
+
 class _FrameRolling:
     """Lazy frame-level rolling proxy (see DataFrame.rolling)."""
 
@@ -3717,38 +3749,15 @@ class _FrameRolling:
         self._min_periods = min_periods
 
     def agg(self, func) -> "DataFrame":
-        from .operators.ranking import with_global_rolling_multi
+        from .operators.ranking import with_global_rolling
 
-        aggs = [func] if isinstance(func, str) else list(func)
-        for a in aggs:
-            if a not in self._AGGS:
-                raise ValueError(
-                    f"unsupported rolling agg {a!r}; one of {self._AGGS}"
-                )
-        frame = self._frame
-        schema = frame._schema
-        icols = list(frame.index_cols)
-        vals = [
-            f.display_name for f in schema.fields
-            if f.is_numeric and f.display_name not in icols
-        ]
-        if not vals:
-            raise ValueError("rolling found no numeric columns")
-        base = frame._sdf.select(
-            *[F.col(schema.resolve_any(c)).alias(c) for c in icols],
-            *[F.col(schema.resolve(c)).cast("double").alias(c) for c in vals],
-        )
-        out = with_global_rolling_multi(
+        aggs = _check_aggs(func, self._AGGS, "rolling")
+        base, icols, vals = self._frame._order_base(numeric_only=True, double=True)
+        out = with_global_rolling(
             base, icols, vals, self._window, aggs,
             min_periods=self._min_periods,
         )
-        single = len(aggs) == 1
-        keep = [F.col(c) for c in icols]
-        for c in vals:
-            for a in aggs:
-                name = c if single else f"{c}_{a}"
-                keep.append(F.col(f"{c}__rolling_{a}").alias(name))
-        return DataFrame(out.select(*keep), index_cols=tuple(icols))
+        return _agg_frame(out, icols, vals, aggs, "rolling")
 
     def sum(self):
         return self.agg("sum")
@@ -3780,19 +3789,7 @@ class _FrameRolling:
         stay on the JVM path."""
         from .operators.ranking import with_global_rolling_apply
 
-        frame = self._frame
-        schema = frame._schema
-        icols = list(frame.index_cols)
-        vals = [
-            f.display_name for f in schema.fields
-            if f.is_numeric and f.display_name not in icols
-        ]
-        if not vals:
-            raise ValueError("rolling found no numeric columns")
-        base = frame._sdf.select(
-            *[F.col(schema.resolve_any(c)).alias(c) for c in icols],
-            *[F.col(schema.resolve(c)).cast("double").alias(c) for c in vals],
-        )
+        base, icols, vals = self._frame._order_base(numeric_only=True, double=True)
         out = with_global_rolling_apply(
             base, icols, vals, self._window, fn,
             self._min_periods, raw=raw,
@@ -3814,37 +3811,14 @@ class _FrameExpanding:
         self._min_periods = int(min_periods)
 
     def agg(self, func) -> "DataFrame":
-        from .operators.ranking import with_global_expanding_multi
+        from .operators.ranking import with_global_expanding
 
-        aggs = [func] if isinstance(func, str) else list(func)
-        for a in aggs:
-            if a not in self._AGGS:
-                raise ValueError(
-                    f"unsupported expanding agg {a!r}; one of {self._AGGS}"
-                )
-        frame = self._frame
-        schema = frame._schema
-        icols = list(frame.index_cols)
-        vals = [
-            f.display_name for f in schema.fields
-            if f.is_numeric and f.display_name not in icols
-        ]
-        if not vals:
-            raise ValueError("expanding found no numeric columns")
-        base = frame._sdf.select(
-            *[F.col(schema.resolve_any(c)).alias(c) for c in icols],
-            *[F.col(schema.resolve(c)).cast("double").alias(c) for c in vals],
-        )
-        out = with_global_expanding_multi(
+        aggs = _check_aggs(func, self._AGGS, "expanding")
+        base, icols, vals = self._frame._order_base(numeric_only=True, double=True)
+        out = with_global_expanding(
             base, icols, vals, aggs, min_periods=self._min_periods,
         )
-        single = len(aggs) == 1
-        keep = [F.col(c) for c in icols]
-        for c in vals:
-            for a in aggs:
-                name = c if single else f"{c}_{a}"
-                keep.append(F.col(f"{c}__expanding_{a}").alias(name))
-        return DataFrame(out.select(*keep), index_cols=tuple(icols))
+        return _agg_frame(out, icols, vals, aggs, "expanding")
 
     def sum(self):
         return self.agg("sum")
@@ -3894,43 +3868,14 @@ class _FrameEwm:
         self._min_periods = int(min_periods)
 
     def mean(self) -> "DataFrame":
-        from .operators.ranking import _bucketed_frame
-        from .operators.windowed import (
-            _ewm_mean_expr,
-            ewm_kernel_width,
-            resolve_ewm_alpha,
-        )
+        from .operators.windowed import ewm_global
 
-        a = resolve_ewm_alpha(
-            self._alpha, self._span, self._halflife, self._com
+        base, icols, vals = self._frame._order_base(numeric_only=True, double=True)
+        out = ewm_global(
+            base, icols, vals, alpha=self._alpha, span=self._span,
+            halflife=self._halflife, com=self._com,
+            min_periods=self._min_periods,
         )
-        d = 1.0 - a
-        W = ewm_kernel_width(a, 1e-16)
-        if W > 8192:
-            raise ValueError(
-                f"ewm kernel width {W} exceeds 8192; use a faster decay "
-                "(larger alpha) or a grouped ewm"
-            )
-        frame = self._frame
-        schema = frame._schema
-        icols = list(frame.index_cols)
-        vals = [
-            f.display_name for f in schema.fields
-            if f.is_numeric and f.display_name not in icols
-        ]
-        if not vals:
-            raise ValueError("ewm found no numeric columns")
-        base = frame._sdf.select(
-            *[F.col(schema.resolve_any(c)).alias(c) for c in icols],
-            *[F.col(schema.resolve(c)).cast("double").alias(c) for c in vals],
-        )
-        un, w = _bucketed_frame(base, icols, W + 1)
-        out = un
-        for c in vals:
-            out = out.withColumn(
-                c, _ewm_mean_expr(F.col(c), d, w, self._min_periods)
-            )
-        out = out.filter(~F.col("__pad__")).drop("__b__", "__pad__", "__g__")
         return DataFrame(
             out.select(*icols, *vals), index_cols=tuple(icols)
         )

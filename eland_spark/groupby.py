@@ -1109,16 +1109,18 @@ class _GroupRolling:
         )
 
     def _run(self, agg: str):
+        """One keyed window for ``agg`` over every agg-compatible field
+        (numeric only for skew/kurt) — the expression is
+        operators/ranking._window_agg, shared with the global rolling
+        kernel (same pandas min_periods and skew/kurt guards)."""
         from pyspark.sql import Window
 
-        fn_map = {
-            "sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
-            "count": F.count,
-            # sample semantics; Spark's merge is numerically stable
-            "std": F.stddev_samp, "var": F.var_samp,
-        }
-        if agg not in fn_map:
-            raise ValueError(f"unsupported agg {agg!r}; one of {sorted(fn_map)}")
+        from .operators.ranking import _ROLLING_AGGS, _window_agg
+
+        if agg not in _ROLLING_AGGS:
+            raise ValueError(
+                f"unsupported agg {agg!r}; one of {sorted(_ROLLING_AGGS)}"
+            )
         gb = self._gb
         w, schema, icols = gb._ordered_window()
         lo = (
@@ -1128,19 +1130,18 @@ class _GroupRolling:
         )
         wf = w.rowsBetween(lo, Window.currentRow)
         index_cols = set(icols)
+        moments = agg in ("skew", "kurt")
         fields = [
             f
             for f in gb._agg_fields(True, agg)
-            if f.display_name not in index_cols
+            if f.display_name not in index_cols and (f.is_numeric or not moments)
         ]
         if not fields:
             raise ValueError("no agg-compatible columns")
         keys_ok = gb._null_keys_guard(schema)
         out_cols = [F.col(schema.resolve_any(ic)).alias(ic) for ic in icols]
         for f in fields:
-            c = F.col(f.column_name)
-            cnt = F.count(c).over(wf)
-            expr = F.when(cnt >= F.lit(self._mp), fn_map[agg](c).over(wf))
+            expr = _window_agg(F.col(f.column_name), agg, wf, self._mp)
             if keys_ok is not None:
                 expr = F.when(keys_ok, expr)
             out_cols.append(expr.alias(f.display_name))
@@ -1175,64 +1176,13 @@ class _GroupRolling:
         frame over the SAME keyed window as the other aggs, with the
         pandas rolling-path guards: <3 observations null, all-equal
         windows 0.0, population variance <= 1e-14 null."""
-        return self._moments("skew")
+        return self._run("skew")
 
     def kurt(self):
         """pandas ``groupby().rolling().kurt()`` — sample-adjusted
         excess G2; <4 observations null, all-equal windows -3.0,
         variance <= 1e-14 null."""
-        return self._moments("kurt")
-
-    def _moments(self, agg: str):
-        from pyspark.sql import Window
-
-        gb = self._gb
-        w, schema, icols = gb._ordered_window()
-        lo = (
-            Window.unboundedPreceding
-            if self._window is None
-            else -(self._window - 1)
-        )
-        wf = w.rowsBetween(lo, Window.currentRow)
-        index_cols = set(icols)
-        fields = [
-            f
-            for f in gb._agg_fields(True, agg)
-            if f.is_numeric and f.display_name not in index_cols
-        ]
-        if not fields:
-            raise ValueError("no agg-compatible columns")
-        keys_ok = gb._null_keys_guard(schema)
-        out_cols = [F.col(schema.resolve_any(ic)).alias(ic) for ic in icols]
-        gate = max(self._mp, 3 if agg == "skew" else 4)
-        null_d = F.lit(None).cast("double")
-        for f in fields:
-            c = F.col(f.column_name).cast("double")
-            flushed = F.when(F.abs(c) < 1e-30, F.lit(0.0)).otherwise(c)
-            cnt = F.count(c).over(wf)
-            n = cnt.cast("double")
-            const = F.min(c).over(wf) == F.max(c).over(wf)
-            noise = F.var_pop(flushed).over(wf) <= F.lit(1e-14)
-            if agg == "skew":
-                conv = (
-                    F.sqrt(n * (n - 1)) / (n - 2)
-                    * F.skewness(flushed).over(wf)
-                )
-                edge = F.lit(0.0)
-            else:
-                g2 = F.kurtosis(flushed).over(wf)
-                conv = ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3))
-                edge = F.lit(-3.0)
-            expr = F.when(
-                cnt >= F.lit(gate),
-                F.when(const, edge).when(noise, null_d).otherwise(conv),
-            )
-            if keys_ok is not None:
-                expr = F.when(keys_ok, expr)
-            out_cols.append(expr.alias(f.display_name))
-        return DataFrame(
-            gb._frame._sdf.select(*out_cols), index_cols=tuple(icols)
-        )
+        return self._run("kurt")
 
     def quantile(self, q: float = 0.5, interpolation: str = "linear"):
         """pandas ``groupby().rolling().quantile(q)`` (and, with

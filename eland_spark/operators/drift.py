@@ -143,7 +143,7 @@ def ks_statistic(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
     dropped (pandas/scipy missing semantics; Spark would otherwise
     group NaN as a value).
     """
-    from .ranking import with_global_cumagg_multi
+    from .ranking import with_global_cumagg
 
     def counts(df, name):
         c = F.col(column).cast("double")
@@ -164,7 +164,7 @@ def ks_statistic(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    cum = with_global_cumagg_multi(
+    cum = with_global_cumagg(
         joined,
         ["__v__"],
         [("__rn__", "sum", "__cr__"), ("__cn__", "sum", "__cc__")],
@@ -246,7 +246,7 @@ def mann_whitney_u(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
     aggregate — the same distinct-value plan as :func:`ks_statistic`
     and ``evaluation.auc``.
     """
-    from .ranking import with_global_cumsum
+    from .ranking import with_global_cumagg
 
     def counts(df, name):
         c = F.col(column).cast("double")
@@ -268,7 +268,9 @@ def mann_whitney_u(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
         .withColumn("__t__", F.col("__rn__") + F.col("__cn__"))
         .localCheckpoint(eager=False)
     )
-    cum = with_global_cumsum(joined, ["__v__"], "__t__", out_col="__cum__")
+    cum = with_global_cumagg(
+        joined, ["__v__"], [("__t__", "sum", "__cum__")]
+    )
     mid = (F.col("__cum__") - F.col("__t__")) + (F.col("__t__") + 1) / 2.0
     tt = F.col("__t__").cast("double")
     agg = cum.agg(
@@ -334,7 +336,7 @@ def rank_scorecard_from_counts(rc: DataFrame, cc: DataFrame) -> DataFrame:
     streamed count snapshots (``streaming/curation.read_rank_scorecard``
     sums per-micro-batch counts and lands here); the batch operator is
     this same core over two freshly aggregated count frames."""
-    from .ranking import with_global_cumagg_multi
+    from .ranking import with_global_cumagg
 
     joined = (
         rc.join(cc, "__v__", "full_outer")
@@ -345,7 +347,7 @@ def rank_scorecard_from_counts(rc: DataFrame, cc: DataFrame) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    cum = with_global_cumagg_multi(
+    cum = with_global_cumagg(
         joined,
         ["__v__"],
         [("__rn__", "sum", "__cr__"), ("__cn__", "sum", "__cc__")],
@@ -701,7 +703,7 @@ def fdr_bh(
     suffix-min from a second prefix pass over the DESCENDING order
     (order by ``-p``), the distinct-p-sized map joined back.
     """
-    from .ranking import with_global_cumagg_multi, with_global_cumsum
+    from .ranking import with_global_cumagg
 
     p = F.col(p_col).cast("double")
     base = sdf.withColumn("__p__", F.when(~F.isnan(p), p))
@@ -740,13 +742,13 @@ def fdr_bh(
         # max rank j of each distinct p's tied block -> the block's
         # shared candidate p*m/j is its SMALLEST, which is what the
         # suffix-min assigns every tied member anyway
-        cum = with_global_cumsum(
-            per, ["__p__"], "__n__", out_col="__j__", partitions=partitions
+        cum = with_global_cumagg(
+            per, ["__p__"], [("__n__", "sum", "__j__")], partitions=partitions
         )
         cand = F.least(
             F.col("__p__") * float(m) / F.col("__j__"), F.lit(1.0)
         )
-        adj = with_global_cumagg_multi(
+        adj = with_global_cumagg(
             cum.select("__p__", cand.alias("__cand__"))
             .withColumn("__negp__", -F.col("__p__")),
             ["__negp__"],

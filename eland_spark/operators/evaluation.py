@@ -44,7 +44,7 @@ def auc(sdf: DataFrame, score_col: str, label_col: str) -> DataFrame:
     random negative with ties counting half. Degenerate inputs (no
     positives or no negatives) yield a null AUC.
     """
-    from .ranking import with_global_cumsum
+    from .ranking import with_global_cumagg
 
     base = sdf.select(
         F.col(score_col).cast("double").alias("__s__"),
@@ -54,7 +54,9 @@ def auc(sdf: DataFrame, score_col: str, label_col: str) -> DataFrame:
         F.count(F.lit(1)).alias("__n__"),
         F.sum("__y__").alias("__np__"),
     )
-    cum = with_global_cumsum(per_score, ["__s__"], "__n__", out_col="__cum__")
+    cum = with_global_cumagg(
+        per_score, ["__s__"], [("__n__", "sum", "__cum__")]
+    )
     # midrank of every row tied at this score: rows before + (n+1)/2
     midrank = (F.col("__cum__") - F.col("__n__")) + (F.col("__n__") + 1) / 2.0
     agg = cum.agg(
@@ -539,7 +541,7 @@ def pr_curve(sdf: DataFrame, score_col: str, label_col: str) -> DataFrame:
     :func:`auc`), and totals fold back from the final bucket — output
     and every intermediate are distinct-score-sized, never row-sized.
     """
-    from .ranking import with_global_cumagg_multi
+    from .ranking import with_global_cumagg
 
     base = sdf.select(
         F.col(score_col).cast("double").alias("__s__"),
@@ -550,7 +552,7 @@ def pr_curve(sdf: DataFrame, score_col: str, label_col: str) -> DataFrame:
         F.sum("__y__").alias("__np__"),
     ).withColumn("__nn__", F.col("__n__") - F.col("__np__"))
     # descending-score running totals: order by -score ascending
-    cum = with_global_cumagg_multi(
+    cum = with_global_cumagg(
         per.withColumn("__negs__", -F.col("__s__")),
         ["__negs__"],
         [("__np__", "sum", "__tp__"), ("__nn__", "sum", "__fp__")],

@@ -94,7 +94,7 @@ def shard_by_budget(
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from .ranking import with_global_cumsum
+    from .ranking import with_global_cumagg
 
     # the documented floor(exclusive_prefix_sum / budget) semantics
     # hold only for integral weights — a fractional weight would be
@@ -111,7 +111,9 @@ def shard_by_budget(
             "aren't silently truncated"
         )
     wq = "`" + weight_col.replace("`", "``") + "`"
-    cum = with_global_cumsum(sdf, list(order_by), weight_col, out_col="__cum__")
+    cum = with_global_cumagg(
+        sdf, list(order_by), [(weight_col, "sum", "__cum__")]
+    )
     # integer DIV: exact at any cumsum magnitude (float floor would
     # misplace shard boundaries past 2^53 total tokens)
     shard = F.expr(

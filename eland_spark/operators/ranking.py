@@ -1,13 +1,15 @@
-"""Distributed global ranking.
+"""Distributed global-order kernels.
 
 ``row_number() OVER (ORDER BY ...)`` with an empty PARTITION BY pulls
-every row through ONE partition — the classic scale cliff. This
-operator produces the same 1-based global row numbers the scalable way:
+every row through ONE partition — the classic scale cliff. Every
+operator here works from ONE rank pass (:func:`_rank_pass`) that
+produces the same 1-based global row numbers the scalable way:
 
 1. range-partition + sort by the order columns (one range shuffle —
    the same shuffle a global sort needs anyway);
-2. per-partition counts -> cumulative offsets on the driver (one tiny
-   row per partition);
+2. per-partition counts (plus any per-bucket aggregate totals a
+   caller asks for) -> cumulative offsets on the driver (one tiny row
+   per partition);
 3. ``monotonically_increasing_id`` on the SORTED, CACHED frame encodes
    (partition_id << 33) | row_in_partition — pure bit arithmetic
    recovers the within-partition position, and ``offset[pid] + pos + 1``
@@ -17,6 +19,24 @@ operator produces the same 1-based global row numbers the scalable way:
 The two passes share the cached sorted frame (range boundaries come
 from sampling, so the frame must be pinned for the id assignment to be
 consistent with the counted layout).
+
+On top of the rank pass, each global-order window op has exactly one
+kernel, and each kernel takes a LIST of columns (the Frame, Series and
+GroupBy fronts are thin callers):
+
+- :func:`with_global_shift` — position self-join (shift/diff/pct_change);
+- :func:`with_global_cumagg` and :func:`with_global_expanding` — the
+  bucket prefix fold :func:`_global_runs` (within-bucket running
+  window + driver prefix-combine of per-bucket totals);
+- :func:`with_global_rolling` — the bucketed padded frame
+  :func:`_bucketed_frame` with every agg from :func:`_window_agg` (the
+  pandas rolling agg + skew/kurt guard expression, shared with the
+  grouped rolling front) in ONE projection;
+- ffill/bfill, interpolate, rolling apply/quantile/corr/cov, and the
+  keyed midranks behind :func:`spearman_corr`.
+
+The global ewm kernel is ``windowed.ewm_global`` on the same padded
+bucket frame.
 """
 
 from __future__ import annotations
@@ -30,17 +50,77 @@ __all__ = [
     "with_global_rank",
     "with_global_shift",
     "with_global_cumagg",
-    "with_global_cumsum",
     "with_global_expanding",
     "with_global_rolling",
-    "with_global_rolling_multi",
     "with_global_rolling_apply",
-    "with_global_expanding_multi",
     "with_global_rolling_quantile",
     "spearman_corr",
 ]
 
 _POS_MASK = (1 << 33) - 1
+
+
+def _rank_pass(
+    sdf: DataFrame,
+    order_by: list[str | Column],
+    partitions: int | None,
+    agg_cols: list[Column] = (),
+    extra_keys: list[Column] = (),
+    ascending: bool = True,
+    range_cols: list[str | Column] | None = None,
+):
+    """The ONE global rank pass body behind :func:`with_global_rank` and
+    :func:`_ranked_bucket_stats`: range-partition + sort + cache the
+    ``__mid__``-tagged frame, then ONE driver collect of per-bucket
+    (``__b__`` = ``__mid__ >> 33``, optionally sub-keyed by
+    ``extra_keys``) row counts ``__cnt__`` plus ``agg_cols``, folded
+    into exclusive rank offsets per bucket.
+
+    Returns ``(src, pid, stats, offsets, total, rank)``: the cached
+    frame (still carrying ``__mid__``), the bucket-id expression, the
+    collected stats rows ordered by ``__b__``, bucket -> offset, the
+    exact row count, and the 1-based global rank expression."""
+    spark = sdf.sparkSession
+    n_parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def _ordering(cs):
+        cols = [F.col(c) if isinstance(c, str) else c for c in cs]
+        return [c.asc() if ascending else c.desc() for c in cols]
+
+    ordering = _ordering(order_by)
+    range_ordering = ordering if range_cols is None else _ordering(range_cols)
+    src = (
+        sdf.repartitionByRange(int(n_parts), *range_ordering)
+        .sortWithinPartitions(*ordering)
+        .withColumn("__mid__", F.monotonically_increasing_id())
+        .cache()
+    )
+    pid = F.shiftright(F.col("__mid__"), 33)
+    stats = (
+        src.groupBy(pid.alias("__b__"), *extra_keys)
+        .agg(F.count(F.lit(1)).alias("__cnt__"), *agg_cols)
+        .orderBy("__b__")
+        .collect()
+    )
+    bucket_counts: dict[int, int] = {}
+    for r in stats:
+        bucket_counts[r["__b__"]] = (
+            bucket_counts.get(r["__b__"], 0) + r["__cnt__"]
+        )
+    offsets: dict[int, int] = {}
+    acc = 0
+    for b in sorted(bucket_counts):
+        offsets[b] = acc
+        acc += bucket_counts[b]
+    pos = F.col("__mid__").bitwiseAND(F.lit(_POS_MASK))
+    if offsets:
+        off_map = F.create_map(
+            *[F.lit(v) for kv in offsets.items() for v in kv]
+        )
+        rank = off_map[pid] + pos + 1
+    else:  # empty frame: no offsets to look up (no rows to rank)
+        rank = pos + 1
+    return src, pid, stats, offsets, acc, rank.cast("long")
 
 
 def with_global_rank(
@@ -71,48 +151,14 @@ def with_global_rank(
     NOTE: the returned frame holds a cache pin; call
     ``.unpersist()`` on it (or let it age out) when done.
     """
-    spark = sdf.sparkSession
-    n_parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    ordering = [c.asc() if ascending else c.desc() for c in cols]
-    if range_cols is None:
-        range_ordering = ordering
-    else:
-        rc = [F.col(c) if isinstance(c, str) else c for c in range_cols]
-        range_ordering = [c.asc() if ascending else c.desc() for c in rc]
-    ranked_src = (
-        sdf.repartitionByRange(int(n_parts), *range_ordering)
-        .sortWithinPartitions(*ordering)
-        .withColumn("__mid__", F.monotonically_increasing_id())
-        .cache()
+    src, _pid, _stats, _off, total, rank = _rank_pass(
+        sdf, order_by, partitions, ascending=ascending, range_cols=range_cols
     )
-    counts = (
-        ranked_src.groupBy(F.shiftright(F.col("__mid__"), 33).alias("__pid__"))
-        .count()
-        .orderBy("__pid__")
-        .collect()
-    )
-    offsets: dict[int, int] = {}
-    acc = 0
-    for r in counts:
-        offsets[r["__pid__"]] = acc
-        acc += r["count"]
-    if offsets:
-        off_map = F.create_map(
-            *[F.lit(v) for kv in offsets.items() for v in kv]
-        )
-        rank = (
-            off_map[F.shiftright(F.col("__mid__"), 33)]
-            + F.col("__mid__").bitwiseAND(F.lit(_POS_MASK))
-            + 1
-        )
-    else:  # empty frame: no offsets to look up (no rows to rank)
-        rank = F.col("__mid__").bitwiseAND(F.lit(_POS_MASK)) + 1
-    out = ranked_src.withColumn(rank_col, rank.cast("long")).drop("__mid__")
+    out = src.withColumn(rank_col, rank).drop("__mid__")
     # the offsets fold already summed the exact row count — stash it so
-    # internal callers (_global_cumaggs/_bucketed_frame/...) can skip
-    # their own count() job wave (private contract; see _ranked_total)
-    out._eland_rank_total = acc
+    # internal callers (_bucketed_frame/...) can skip their own count()
+    # job wave (private contract; see _ranked_total)
+    out._eland_rank_total = total
     return out
 
 
@@ -136,10 +182,10 @@ def _ranked_bucket_stats(
     collect — the bucket IS the range partition (``__b__`` =
     ``__mid__ >> 33``), which is a contiguous global-rank range, so
     prefix folds over the stats rows in ``__b__`` order mean exactly
-    what the rank-derived bucket plan's folds meant, while the
-    per-bucket totals no longer cost a second synchronous job wave
-    (r8 opt: each totals collect measured ~0.25 s steady-state at
-    sf0.1 on top of the rank pass it duplicated).
+    what a rank-derived bucket plan's folds would, while the
+    per-bucket totals cost no second synchronous job wave (r8 opt: each
+    totals collect measured ~0.25 s steady-state at sf0.1 on top of the
+    rank pass it duplicated).
 
     Returns ``(ranked, bucket_col, stats, offsets)``: ``ranked``
     carries the input columns plus ``__g__`` (1-based global rank) and
@@ -156,63 +202,133 @@ def _ranked_bucket_stats(
     arithmetic — same balance the rank pass itself runs on. The
     returned frame holds a cache pin (the :func:`with_global_rank`
     contract) and stashes ``_eland_rank_total``."""
-    spark = sdf.sparkSession
-    n_parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    ordering = [c.asc() for c in cols]
-    src = (
-        sdf.repartitionByRange(int(n_parts), *ordering)
-        .sortWithinPartitions(*ordering)
-        .withColumn("__mid__", F.monotonically_increasing_id())
-        .cache()
+    src, pid, stats, offsets, total, rank = _rank_pass(
+        sdf, order_by, partitions, agg_cols, extra_keys or ()
     )
-    pid = F.shiftright(F.col("__mid__"), 33)
-    keys = [pid.alias("__b__"), *(extra_keys or [])]
-    stats = (
-        src.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__cnt__"), *agg_cols)
-        .orderBy("__b__")
-        .collect()
-    )
-    bucket_counts: dict[int, int] = {}
-    for r in stats:
-        bucket_counts[r["__b__"]] = (
-            bucket_counts.get(r["__b__"], 0) + r["__cnt__"]
-        )
-    offsets: dict[int, int] = {}
-    acc = 0
-    for b in sorted(bucket_counts):
-        offsets[b] = acc
-        acc += bucket_counts[b]
-    if offsets:
-        off_map = F.create_map(
-            *[F.lit(v) for kv in offsets.items() for v in kv]
-        )
-        rank = off_map[pid] + F.col("__mid__").bitwiseAND(F.lit(_POS_MASK)) + 1
-    else:  # empty frame
-        rank = F.col("__mid__").bitwiseAND(F.lit(_POS_MASK)) + 1
     out = src.select(
-        "*", pid.alias("__b__"), rank.cast("long").alias("__g__")
+        "*", pid.alias("__b__"), rank.alias("__g__")
     ).drop("__mid__")
-    out._eland_rank_total = acc
+    out._eland_rank_total = total
     return out, F.col("__b__"), stats, offsets
+
+
+def _running(bucket: Column):
+    """Running (unbounded-preceding -> current) frame over global rank
+    within one bucket — the within-bucket half of every prefix fold."""
+    return (
+        Window.partitionBy(bucket)
+        .orderBy("__g__")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+_RUN_FNS = {
+    "sum": F.sum, "count": F.count, "max": F.max, "min": F.min,
+    "prod": F.product,
+}
+
+
+def _global_runs(
+    sdf: DataFrame,
+    order_by: list[str | Column],
+    tasks: dict[str, tuple[Column, str]],
+    partitions: int | None = None,
+):
+    """The bucket prefix fold behind every windowless running
+    aggregation (cumagg, expanding): ONE rank pass whose stats collect
+    also carries every task's per-bucket total, ONE running window per
+    bucket (one balanced hash exchange on the bucket id), and the
+    bucket totals prefix-combined on the driver and merged back as map
+    literals.
+
+    ``tasks`` maps a key to ``(input, kind)`` with kind one of
+    sum/count/max/min/prod (count = running NON-NULL observation
+    count; prod = true running product — F.product within buckets,
+    driver prefix-multiply across them, so zeros and signs are exact,
+    no log/exp detour). Returns ``(ranked, runs)``: ``ranked`` carries
+    ``__g__`` and ``__b__`` (callers drop both) and ``runs`` maps each
+    key to its running-value Column, defined at EVERY row (null inputs
+    carry the run forward) — callers apply their own null policy."""
+    ranked, bucket, totals, _boff = _ranked_bucket_stats(
+        sdf,
+        order_by,
+        [
+            _RUN_FNS[k](e).alias(f"__t_{i}__")
+            for i, (e, k) in enumerate(tasks.values())
+        ],
+        partitions,
+    )
+    w = _running(bucket)
+    runs: dict[str, Column] = {}
+    for i, (key, (e, kind)) in enumerate(tasks.items()):
+        within = _RUN_FNS[kind](e).over(w)
+        additive = kind in ("sum", "count")
+        # exclusive prefix combine of bucket totals on the driver: sum/
+        # count have identity 0, prod 1; max/min have none — buckets
+        # without a preceding total are absent from the map (null
+        # lookup, skipped by greatest/least)
+        offsets: dict[int, object] = {}
+        acc: object = 0 if additive else 1.0 if kind == "prod" else None
+        for r in totals:
+            if acc is not None:
+                offsets[r["__b__"]] = acc
+            t = r[f"__t_{i}__"]
+            if t is None:
+                continue
+            if additive:
+                acc = acc + t
+            elif kind == "prod":
+                # a zero prefix stays a (signed) zero: a later bucket
+                # total is infinite only by overflow of finite values,
+                # which the sequential product never reaches (0 * inf
+                # would be NaN)
+                acc = acc * (t if acc != 0 else math.copysign(1.0, t))
+            elif acc is None:
+                acc = t
+            else:
+                acc = max(acc, t) if kind == "max" else min(acc, t)
+        if not offsets:  # empty frame / all-null column / single bucket
+            runs[key] = within
+            continue
+        carry = F.create_map(
+            *[F.lit(v) for kv in offsets.items() for v in kv]
+        )[bucket]
+        if additive:
+            # within is NULL when the bucket prefix holds no
+            # observations — the carry must still flow through
+            run = F.coalesce(carry, F.lit(0)) + F.coalesce(within, F.lit(0))
+        elif kind == "prod":
+            # same zero rule per row: a zero carry keeps the zero even
+            # when the within-bucket product overflowed (inf, or NaN
+            # once that inf met a zero) — sign via signum when defined
+            c = F.coalesce(carry, F.lit(1.0))
+            wp = F.coalesce(within, F.lit(1.0))
+            run = F.when(
+                c == 0, c * F.nanvl(F.signum(wp), F.lit(1.0))
+            ).otherwise(c * wp)
+        elif kind == "max":
+            run = F.greatest(carry, within)
+        else:
+            run = F.least(carry, within)
+        runs[key] = run
+    return ranked, runs
 
 
 def with_global_shift(
     sdf: DataFrame,
     order_by: list[str | Column],
-    value_col: str,
+    value_cols: list[str],
     periods: int = 1,
-    out_col: str = "shifted",
     partitions: int | None = None,
     dense_pos: bool = False,
 ) -> DataFrame:
     """Value of the row ``periods`` positions earlier (later for
     negative) in the GLOBAL order — pandas ``shift`` without the
     empty-PARTITION-BY single-reducer window: global positions come
-    from :func:`with_global_rank`, and the shifted value is a
-    self-equi-join on ``position - periods`` (one hash shuffle on the
-    dense position key — perfectly balanced, no cliff). Rows with no
+    from :func:`with_global_rank`, and ONE self-equi-join on
+    ``position - periods`` carries every column in ``value_cols`` (one
+    hash shuffle on the dense position key — perfectly balanced, no
+    cliff). Shifted twins land in ``<col>__prev__``; rows with no
     source position get null, matching pandas.
 
     ``dense_pos=True``: the single ``order_by`` column already IS a
@@ -232,111 +348,9 @@ def with_global_shift(
         )
     src = ranked.select(
         (F.col("__g__") + F.lit(periods)).alias("__g__"),
-        F.col(value_col).alias(out_col),
+        *[F.col(c).alias(f"{c}__prev__") for c in value_cols],
     )
     return ranked.join(src, "__g__", "left").drop("__g__")
-
-
-def _global_cumaggs(
-    sdf: DataFrame,
-    order_by: list[str | Column],
-    value_col: str,
-    aggs: list[str],
-    partitions: int | None = None,
-    center: float = 0.0,
-) -> DataFrame:
-    """Multi-agg core of the windowless global running aggregation:
-    positions from :func:`with_global_rank` bucketed into
-    ~``partitions`` fixed-size ranges, ONE balanced hash exchange on
-    the bucket id for the within-bucket runs, per-bucket totals
-    prefix-combined on the driver and merged back via map literals.
-    ``aggs`` may contain sum/max/min/count/prod (count = running
-    NON-NULL observation count; prod = true running product —
-    F.product within buckets, driver prefix-multiply across them, so
-    zeros and signs are exact, no log/exp detour) plus the moment pair
-    sumsq/sumsh used by expanding std/var: both are computed on the
-    DOUBLE-cast, ``center``-shifted value (``(x - center)`` and its
-    square) so integer inputs cannot overflow the square and a
-    large-magnitude mean does not cancel catastrophically in the
-    ``sumsq - sumsh^2/n`` moment difference (variance is shift
-    invariant, so callers pass the column's global mean as ``center``).
-    Emits one ``__cum_<agg>__`` column per agg;
-    the running value is defined at EVERY row (null rows carry the run
-    forward) — callers apply their own null policy."""
-    allowed = ("sum", "max", "min", "count", "prod", "sumsq", "sumsh")
-    bad = [a for a in aggs if a not in allowed]
-    if bad:
-        raise ValueError(f"agg must be one of {allowed}; got {bad}")
-    fns = {"sum": F.sum, "max": F.max, "min": F.min, "count": F.count,
-           "prod": F.product,
-           # running second/first moments for expanding std/var; both
-           # combine exactly like sums. Inputs are double-cast and
-           # mean-shifted (see ``center`` above) — never the raw
-           # integer column, whose square can overflow 64-bit.
-           "sumsq": lambda c: F.sum(c * c),
-           "sumsh": F.sum}
-    raw = F.col(value_col)
-    shifted = raw.cast("double") - F.lit(float(center))
-    ins = {a: (shifted if a in ("sumsq", "sumsh") else raw) for a in aggs}
-    ranked, bucket, totals, _boff = _ranked_bucket_stats(
-        sdf,
-        order_by,
-        [fns[a](ins[a]).alias(f"__t_{a}__") for a in aggs],
-        partitions,
-    )
-    w = (
-        Window.partitionBy(bucket)
-        .orderBy("__g__")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = ranked
-    for a in aggs:
-        within = fns[a](ins[a]).over(w)
-        # exclusive prefix combine of bucket totals on the driver: sum/
-        # count have identity 0; max/min have none — buckets without a
-        # preceding total are absent from the map (null lookup, skipped
-        # by greatest/least)
-        offsets: dict[int, object] = {}
-        sum_family = ("sum", "count", "sumsq", "sumsh")
-        acc: object = (
-            0 if a in sum_family else 1.0 if a == "prod" else None
-        )
-        for r in totals:
-            if acc is not None:
-                offsets[r["__b__"]] = acc
-            t = r[f"__t_{a}__"]
-            if t is None:
-                continue
-            if a in sum_family:
-                acc = acc + t
-            elif a == "prod":
-                acc = acc * t
-            elif acc is None:
-                acc = t
-            else:
-                acc = max(acc, t) if a == "max" else min(acc, t)
-        if offsets:
-            off_map = F.create_map(
-                *[F.lit(v) for kv in offsets.items() for v in kv]
-            )
-            if a in sum_family:
-                # within is NULL when the bucket prefix holds no
-                # observations — the carry must still flow through
-                run = F.coalesce(off_map[bucket], F.lit(0)) + F.coalesce(
-                    within, F.lit(0)
-                )
-            elif a == "prod":
-                run = F.coalesce(off_map[bucket], F.lit(1.0)) * F.coalesce(
-                    within, F.lit(1.0)
-                )
-            elif a == "max":
-                run = F.greatest(off_map[bucket], within)
-            else:
-                run = F.least(off_map[bucket], within)
-        else:  # empty frame / all-null column / single bucket
-            run = within
-        out = out.withColumn(f"__cum_{a}__", run)
-    return out.drop("__b__")  # __g__ retained — callers drop it
 
 
 def _combine_moments(na, ma, m2a, m3a, m4a, nb, mb, m2b, m3b, m4b):
@@ -402,11 +416,7 @@ def _global_cummoments(
         ],
         partitions,
     )
-    w = (
-        Window.partitionBy(bucket)
-        .orderBy("__g__")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = _running(bucket)
 
     # Expression-size discipline (CLAUDE.md): Column trees EXPAND on
     # every reference, and the Pébay combine below references each
@@ -552,106 +562,114 @@ def _global_cummoments(
 def with_global_cumagg(
     sdf: DataFrame,
     order_by: list[str | Column],
-    value_col: str,
-    agg: str = "sum",
-    out_col: str = "cumagg",
+    pairs: list[tuple[str, str, str]],
     partitions: int | None = None,
 ) -> DataFrame:
-    """Running ``sum``/``max``/``min``/``prod`` over the GLOBAL order,
-    windowless at scale (see :func:`_global_cumaggs` for the plan).
-    Null values stay null and are skipped by the run (pandas
+    """Running sum/max/min/prod over the GLOBAL order for every
+    ``(value_col, agg, out_col)`` in ``pairs`` — one bucket prefix fold
+    (:func:`_global_runs`: one balanced exchange, driver prefix-combine
+    of per-bucket totals) paid once for the whole column set. Null
+    values stay null and are skipped by the run (pandas
     cumsum/cummax skipna semantics)."""
-    if agg not in ("sum", "max", "min", "prod"):
-        raise ValueError("agg must be sum/max/min/prod")
-    out = _global_cumaggs(sdf, order_by, value_col, [agg], partitions)
-    expr = F.when(F.col(value_col).isNotNull(), F.col(f"__cum_{agg}__"))
-    return out.withColumn(out_col, expr).drop(f"__cum_{agg}__", "__g__")
+    for _c, a, _o in pairs:
+        if a not in ("sum", "max", "min", "prod"):
+            raise ValueError("agg must be sum/max/min/prod")
+    ranked, runs = _global_runs(
+        sdf, order_by, {o: (F.col(c), a) for c, a, o in pairs}, partitions
+    )
+    return ranked.withColumns({
+        o: F.when(F.col(c).isNotNull(), runs[o]) for c, _a, o in pairs
+    }).drop("__g__", "__b__")
 
 
 def with_global_expanding(
     sdf: DataFrame,
     order_by: list[str | Column],
-    value_col: str,
+    value_cols: list[str],
     aggs: list[str],
     min_periods: int = 1,
     partitions: int | None = None,
 ) -> DataFrame:
-    """pandas ``expanding()`` aggregates over the GLOBAL order — the
-    cumulative bucket plan of :func:`_global_cumaggs` with expanding
-    null semantics: every row (null values included) carries the
-    running value, masked null until ``min_periods`` NON-NULL
-    observations have been seen. ``aggs`` from
-    sum/mean/min/max/count/std/var/skew/kurt; mean = running sum /
-    running count; std/var derive from the running (shifted-sum,
-    shifted-sum-of-squares, count) moments, where the shift is the
-    column's GLOBAL mean (one extra scalar agg, computed only when
-    std/var is requested): variance is shift invariant, and centering
-    near the mean keeps the ``m2 = sumsq - sumsh^2/n`` difference
-    numerically stable for large-magnitude data and overflow-free for
-    integer inputs (both moments are double-cast before squaring) —
-    sample (n-1) semantics, negative rounding dust
-    clamped at zero, null until two observations like pandas. skew/
-    kurt extend the same discipline to the centered cube/quartic sums
-    (pandas sample G1/G2; <3/<4 observations null, all-equal prefixes
-    0.0 / -3.0 — the pandas ROLLING cython path, which expanding()
-    shares; NOTE pandas' whole-Series kurt of a constant returns 0.0
-    instead — each pandas code path is mirrored where it's used). Adds
-    one ``expanding_<agg>`` column per agg."""
+    """pandas ``expanding()`` aggregates over the GLOBAL order for every
+    column in ``value_cols`` through ONE bucket prefix fold
+    (:func:`_global_runs`) — never one plan per column. Expanding null
+    semantics: every row (null values included) carries the running
+    value, masked null until ``min_periods`` NON-NULL observations have
+    been seen (count's gate is the ROW position, the pandas quirk).
+    ``aggs`` from sum/mean/min/max/count/std/var/skew/kurt; mean =
+    running sum / running count; std/var derive from the running
+    (shifted-sum, shifted-sum-of-squares, count) moments, where the
+    shift is each column's GLOBAL mean (one extra scalar agg computes
+    every center at once, only when std/var is requested): variance is
+    shift invariant, and centering near the mean keeps the
+    ``m2 = sumsq - sumsh^2/n`` difference numerically stable for
+    large-magnitude data and overflow-free for integer inputs (both
+    moments are double-cast before squaring) — sample (n-1) semantics,
+    negative rounding dust clamped at zero, null until two observations
+    like pandas. skew/kurt run on the running central-moment plan
+    (:func:`_expanding_moments`, one column per call). Adds one
+    ``{col}__expanding_{agg}`` column per (col, agg)."""
     moment_aggs = [a for a in aggs if a in ("skew", "kurt")]
     if moment_aggs:
-        if len(moment_aggs) != len(aggs):
+        if len(moment_aggs) != len(aggs) or len(value_cols) != 1:
             raise ValueError(
-                "skew/kurt run on the running-moment plan and cannot "
-                "mix with other expanding aggs in one call"
+                "skew/kurt run on the running-moment plan: one column "
+                "per call, not mixed with other expanding aggs"
             )
         return _expanding_moments(
-            sdf, order_by, value_col, aggs, min_periods, partitions
+            sdf, order_by, value_cols[0], aggs, min_periods, partitions
         )
-    base_aggs = {"count"}
     for a in aggs:
         if a not in ("sum", "mean", "min", "max", "count", "std", "var"):
             raise ValueError(f"unsupported expanding agg {a!r}")
-        if a == "mean":
-            base_aggs.add("sum")
-        elif a in ("std", "var"):
-            base_aggs.update({"sumsh", "sumsq"})
-        elif a != "count":
-            base_aggs.add(a)
-    center = 0.0
-    if "sumsq" in base_aggs:
-        mu = sdf.agg(
-            F.avg(F.col(value_col).cast("double"))
-        ).first()[0]
-        center = float(mu) if mu is not None else 0.0
-    out = _global_cumaggs(
-        sdf, order_by, value_col, sorted(base_aggs), partitions,
-        center=center,
-    )
-    seen = F.col("__cum_count__")
-    ok = seen >= F.lit(min_periods)
-    # pandas quirk: count's min_periods gates on the number of window
-    # ROWS (the global position), not non-null observations
+    wanted = set(aggs)
+    if "mean" in wanted:
+        wanted.add("sum")
+    centers: dict[str, float] = {}
+    if wanted & {"std", "var"}:
+        row = sdf.agg(
+            *[F.avg(F.col(c).cast("double")).alias(c) for c in value_cols]
+        ).first()
+        centers = {c: (float(row[c]) if row[c] is not None else 0.0)
+                   for c in value_cols}
+
+    # one task per running input; count is always present per column
+    # (the min_periods gate)
+    tasks: dict[str, tuple[Column, str]] = {}
+    for c in value_cols:
+        raw = F.col(c)
+        tasks[f"{c}__cnt"] = (raw, "count")
+        if c in centers:
+            sh = raw.cast("double") - F.lit(centers[c])
+            tasks[f"{c}__sumsh"] = (sh, "sum")
+            tasks[f"{c}__sumsq"] = (sh * sh, "sum")
+        for a in ("sum", "min", "max"):
+            if a in wanted:
+                tasks[f"{c}__{a}"] = (raw, a)
+    ranked, runs = _global_runs(sdf, order_by, tasks, partitions)
+
     ok_count = F.col("__g__") >= F.lit(min_periods)
-    for a in aggs:
-        if a == "count":
-            expr = F.when(ok_count, seen.cast("double"))
-        elif a == "mean":
-            expr = F.when(ok, F.col("__cum_sum__") / seen)
-        elif a in ("std", "var"):
-            m2 = F.greatest(
-                F.col("__cum_sumsq__")
-                - F.col("__cum_sumsh__") * F.col("__cum_sumsh__") / seen,
-                F.lit(0.0),
-            )
-            v = m2 / (seen - 1)
-            v = F.sqrt(v) if a == "std" else v
-            expr = F.when(ok & (seen >= 2), v)
-        else:
-            expr = F.when(ok, F.col(f"__cum_{a}__"))
-        out = out.withColumn(f"expanding_{a}", expr)
-    return out.drop(
-        "__g__", *[c for c in out.columns if c.startswith("__cum_")]
-    )
+    out: dict[str, Column] = {}
+    for c in value_cols:
+        seen = runs[f"{c}__cnt"]
+        ok = seen >= F.lit(min_periods)
+        for a in aggs:
+            if a == "count":
+                expr = F.when(ok_count, seen.cast("double"))
+            elif a == "mean":
+                expr = F.when(ok, runs[f"{c}__sum"] / seen)
+            elif a in ("std", "var"):
+                sh = runs[f"{c}__sumsh"]
+                m2 = F.greatest(
+                    runs[f"{c}__sumsq"] - sh * sh / seen, F.lit(0.0)
+                )
+                v = m2 / (seen - 1)
+                v = F.sqrt(v) if a == "std" else v
+                expr = F.when(ok & (seen >= 2), v)
+            else:
+                expr = F.when(ok, runs[f"{c}__{a}"])
+            out[f"{c}__expanding_{a}"] = expr
+    return ranked.withColumns(out).drop("__g__", "__b__")
 
 
 def _expanding_moments(
@@ -669,7 +687,9 @@ def _expanding_moments(
     all-equal prefix (num_consecutive_same_value in pandas; exact
     running min == max here) -> 0.0 / -3.0; otherwise a population
     variance at or below pandas' absolute 1e-14 guard -> null (the
-    moment ratio is rounding noise there, GH 42064)."""
+    moment ratio is rounding noise there, GH 42064). NOTE pandas'
+    whole-Series kurt of a constant returns 0.0 instead — each pandas
+    code path is mirrored where it's used."""
     out = _global_cummoments(sdf, order_by, value_col, partitions)
     n = F.col("__cum_n__")
     m2 = F.col("__cum_m2__")
@@ -697,7 +717,7 @@ def _expanding_moments(
                 .when(noise, F.lit(None).cast("double"))
                 .otherwise(big),
             )
-        out = out.withColumn(f"expanding_{a}", expr)
+        out = out.withColumn(f"{value_col}__expanding_{a}", expr)
     return out.drop(
         "__g__", *[c for c in out.columns if c.startswith("__cum_")]
     )
@@ -761,10 +781,65 @@ def _bucketed_frame(
     return un, w
 
 
+_ROLL_FNS = {
+    "sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
+    "count": F.count, "std": F.stddev_samp, "var": F.var_samp,
+}
+_ROLLING_AGGS = (*_ROLL_FNS, "skew", "kurt")
+
+
+def _window_agg(col: Column, agg: str, w, min_periods: int) -> Column:
+    """pandas rolling/expanding ``agg`` of ``col`` over the bounded (or
+    running) window ``w`` — the ONE expression behind the global
+    rolling kernel and the grouped rolling front. Null until
+    ``min_periods`` non-null observations are inside the frame.
+
+    sum/mean/min/max/count/std/var map onto Spark's window aggregates
+    (std/var are sample (n-1) semantics via stddev_samp/var_samp, whose
+    internal merge is numerically stable). skew/kurt are pandas'
+    sample-adjusted G1/G2, converted algebraically from Spark's
+    population window moments and mirroring pandas roll_skew/roll_kurt
+    edge semantics: fewer than 3 (skew) / 4 (kurt) observations -> null
+    regardless of min_periods, an exact all-equal window -> 0.0 (skew)
+    / -3.0 (kurt), else a population variance at or below the absolute
+    1e-14 guard -> null (GH 42064). NOTE this differs from pandas' own
+    whole-Series kurt, which returns 0.0 for constants; we mirror each
+    pandas code path where it's used."""
+    cnt = F.count(col).over(w)
+    if agg in _ROLL_FNS:
+        return F.when(cnt >= F.lit(min_periods), _ROLL_FNS[agg](col).over(w))
+    if agg not in ("skew", "kurt"):
+        raise ValueError(
+            f"unsupported rolling agg {agg!r}; one of {sorted(_ROLLING_AGGS)}"
+        )
+    x = col.cast("double")
+    # |x| < 1e-30 flushes to 0: under ANSI the builtin moment aggs'
+    # final division throws when the central-moment power UNDERFLOWS
+    # (subnormal-magnitude data only); affected windows all land in
+    # the all-equal branch anyway
+    flushed = F.when(F.abs(x) < 1e-30, F.lit(0.0)).otherwise(x)
+    n = cnt.cast("double")
+    const = F.min(x).over(w) == F.max(x).over(w)
+    noise = F.var_pop(flushed).over(w) <= F.lit(1e-14)
+    if agg == "skew":
+        conv = F.sqrt(n * (n - 1)) / (n - 2) * F.skewness(flushed).over(w)
+        edge, gate = F.lit(0.0), 3
+    else:
+        g2 = F.kurtosis(flushed).over(w)
+        conv = ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3))
+        edge, gate = F.lit(-3.0), 4
+    return F.when(
+        cnt >= F.lit(max(min_periods, gate)),
+        F.when(const, edge)
+        .when(noise, F.lit(None).cast("double"))
+        .otherwise(conv),
+    )
+
+
 def with_global_rolling(
     sdf: DataFrame,
     order_by: list[str | Column],
-    value_col: str,
+    value_cols: list[str],
     window: int,
     aggs: list[str],
     min_periods: int | None = None,
@@ -772,89 +847,35 @@ def with_global_rolling(
     dense_total: int | None = None,
 ) -> DataFrame:
     """Row-based rolling aggregates over the GLOBAL order (pandas
-    ``rolling(window)``), windowless at scale: positions from
-    :func:`with_global_rank` are bucketed (bucket size >= ``window`` so
-    a frame spans at most two buckets), the last ``window-1`` rows of
-    each bucket are REPLICATED into the next bucket as padding, and one
-    balanced hash exchange on the bucket id computes the bounded frame
-    locally; padding rows are dropped afterwards. min_periods follows
-    pandas: the result is null until ``min_periods`` non-null
-    observations are inside the frame.
+    ``rolling(window)``) for every column in ``value_cols``, windowless
+    at scale: the bucketed padded frame of :func:`_bucketed_frame`
+    (bucket size >= ``window`` so a frame spans at most two buckets,
+    the last ``window-1`` rows of each bucket REPLICATED into the next,
+    one balanced hash exchange on the bucket id) paid once for the
+    whole column set; padding rows are dropped afterwards.
 
-    Returns the frame plus one ``rolling_<agg>`` column per agg in
-    ``aggs`` (sum/mean/min/max/count/std/var/skew/kurt — std/var are
-    sample (n-1) semantics via Spark's stddev_samp/var_samp, whose
-    internal merge is numerically stable; skew/kurt are pandas'
-    sample-adjusted G1/G2, converted algebraically from Spark's
-    population window moments and mirroring pandas roll_skew/roll_kurt
-    edge semantics: fewer than 3 (skew) / 4 (kurt) observations ->
-    null regardless of min_periods, an all-equal window -> 0.0 (skew)
-    / -3.0 (kurt) — NOTE this differs from pandas' own whole-Series
-    kurt, which returns 0.0 for constants; we mirror each pandas code
-    path where it's used)."""
-    fn_map = {
-        "sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
-        "count": F.count, "std": F.stddev_samp, "var": F.var_samp,
-    }
-    moments = ("skew", "kurt")
-    bad = [a for a in aggs if a not in fn_map and a not in moments]
+    Adds one ``{col}__rolling_{agg}`` column per (col, agg) for
+    ``aggs`` in ``_ROLLING_AGGS`` (see :func:`_window_agg`);
+    ``min_periods`` (default ``window``) counts each column's OWN
+    non-null observations (pandas semantics). Every agg lands in ONE
+    projection: same-spec window expressions (the count gate, and the
+    const/noise guards shared by skew+kurt) dedup only within a single
+    select — a withColumn per agg would plan one Window (Exchange+Sort)
+    node per layer (CLAUDE.md rule)."""
+    bad = [a for a in aggs if a not in _ROLLING_AGGS]
     if bad:
         raise ValueError(
-            f"unsupported rolling aggs {bad}; one of "
-            f"{sorted([*fn_map, *moments])}"
+            f"unsupported rolling aggs {bad}; one of {sorted(_ROLLING_AGGS)}"
         )
     if window < 1:
         raise ValueError("window must be >= 1")
     mp = window if min_periods is None else min_periods
     un, w = _bucketed_frame(sdf, order_by, window, partitions, dense_total)
-    cnt = F.count(F.col(value_col)).over(w)
-    # all aggs land in ONE projection: same-spec window expressions
-    # (cnt, and the const/noise guards shared by skew+kurt) dedup only
-    # within a single select — a withColumn per agg would plan one
-    # Window (Exchange+Sort) node per layer (CLAUDE.md rule)
-    rolled: list[Column] = []
-    for a in aggs:
-        if a in moments:
-            col = F.col(value_col).cast("double")
-            # |x| < 1e-30 flushes to 0: under ANSI the builtin moment
-            # aggs' final division throws when the central-moment power
-            # UNDERFLOWS (subnormal-magnitude data only); affected
-            # windows all land in the all-equal branch anyway
-            flushed = F.when(F.abs(col) < 1e-30, F.lit(0.0)).otherwise(col)
-            n = cnt.cast("double")
-            const = F.min(col).over(w) == F.max(col).over(w)
-            # pandas roll_skew/roll_kurt order of guards: exact
-            # all-equal window -> 0.0 / -3.0; else population variance
-            # at or below the absolute 1e-14 guard -> NaN (GH 42064)
-            noise = F.var_pop(flushed).over(w) <= F.lit(1e-14)
-            null_d = F.lit(None).cast("double")
-            if a == "skew":
-                conv = (
-                    F.sqrt(n * (n - 1)) / (n - 2)
-                    * F.skewness(flushed).over(w)
-                )
-                expr = F.when(
-                    cnt >= F.lit(max(mp, 3)),
-                    F.when(const, F.lit(0.0))
-                    .when(noise, null_d)
-                    .otherwise(conv),
-                )
-            else:
-                g2 = F.kurtosis(flushed).over(w)
-                conv = (
-                    ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3))
-                )
-                expr = F.when(
-                    cnt >= F.lit(max(mp, 4)),
-                    F.when(const, F.lit(-3.0))
-                    .when(noise, null_d)
-                    .otherwise(conv),
-                )
-        else:
-            expr = F.when(
-                cnt >= F.lit(mp), fn_map[a](F.col(value_col)).over(w)
-            )
-        rolled.append(expr.alias(f"rolling_{a}"))
+    rolled = [
+        _window_agg(F.col(c), a, w, mp).alias(f"{c}__rolling_{a}")
+        for c in value_cols
+        for a in aggs
+    ]
     out = un.select("*", *rolled)
     return out.filter(~F.col("__pad__")).drop("__b__", "__pad__", "__g__")
 
@@ -906,228 +927,6 @@ def with_global_rolling_binary(
         f"rolling_{metric}", F.when(pairs >= F.lit(mp), val)
     )
     return out.filter(~F.col("__pad__")).drop("__b__", "__pad__", "__g__")
-
-
-def with_global_cumsum(
-    sdf: DataFrame,
-    order_by: list[str | Column],
-    value_col: str,
-    out_col: str = "cumsum",
-    partitions: int | None = None,
-) -> DataFrame:
-    """Running sum over the global order — see :func:`with_global_cumagg`."""
-    return with_global_cumagg(
-        sdf, order_by, value_col, "sum", out_col, partitions
-    )
-
-
-def with_global_shift_multi(
-    sdf: DataFrame,
-    order_by: list[str | Column],
-    value_cols: list[str],
-    periods: int = 1,
-    suffix: str = "__prev__",
-    partitions: int | None = None,
-) -> DataFrame:
-    """Multi-column :func:`with_global_shift`: ONE rank pass and ONE
-    position self-join carry every value column (frame-level
-    shift/diff/pct_change pay the shuffle once, not per column).
-    Shifted twins land in ``<col><suffix>``."""
-    ranked = with_global_rank(
-        sdf, order_by, rank_col="__g__", partitions=partitions
-    )
-    src = ranked.select(
-        (F.col("__g__") + F.lit(periods)).alias("__g__"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in value_cols],
-    )
-    return ranked.join(src, "__g__", "left").drop("__g__")
-
-
-def with_global_cumagg_multi(
-    sdf: DataFrame,
-    order_by: list[str | Column],
-    pairs: list[tuple[str, str, str]],
-    partitions: int | None = None,
-) -> DataFrame:
-    """Running sum/max/min/prod over the GLOBAL order for MANY columns at
-    once — the bucket plan of :func:`with_global_cumagg` (one balanced
-    exchange, driver prefix-combine of per-bucket totals) paid a single
-    time; ``pairs`` is ``[(value_col, agg, out_col), ...]``. Null
-    values stay null, the run continues (pandas skipna)."""
-    fns = {"sum": F.sum, "max": F.max, "min": F.min, "prod": F.product}
-    for _, a, _o in pairs:
-        if a not in fns:
-            raise ValueError("agg must be sum/max/min/prod")
-    ranked, bucket, totals, _boff = _ranked_bucket_stats(
-        sdf,
-        order_by,
-        [
-            fns[a](F.col(c)).alias(f"__t_{i}__")
-            for i, (c, a, _o) in enumerate(pairs)
-        ],
-        partitions,
-    )
-    w = (
-        Window.partitionBy(bucket)
-        .orderBy("__g__")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = ranked
-    for i, (c, a, name) in enumerate(pairs):
-        within = fns[a](F.col(c)).over(w)
-        offsets: dict[int, object] = {}
-        acc: object = 0 if a == "sum" else 1.0 if a == "prod" else None
-        for r in totals:
-            if acc is not None:
-                offsets[r["__b__"]] = acc
-            t = r[f"__t_{i}__"]
-            if t is None:
-                continue
-            if a == "sum":
-                acc = acc + t
-            elif a == "prod":
-                acc = acc * t
-            elif acc is None:
-                acc = t
-            else:
-                acc = max(acc, t) if a == "max" else min(acc, t)
-        if offsets:
-            off_map = F.create_map(
-                *[F.lit(v) for kv in offsets.items() for v in kv]
-            )
-            if a == "sum":
-                run = F.coalesce(off_map[bucket], F.lit(0)) + F.coalesce(
-                    within, F.lit(0)
-                )
-            elif a == "prod":
-                run = F.coalesce(off_map[bucket], F.lit(1.0)) * F.coalesce(
-                    within, F.lit(1.0)
-                )
-            elif a == "max":
-                run = F.greatest(off_map[bucket], within)
-            else:
-                run = F.least(off_map[bucket], within)
-        else:
-            run = within
-        out = out.withColumn(name, F.when(F.col(c).isNotNull(), run))
-    return out.drop("__g__", "__b__")
-
-
-def with_global_expanding_multi(
-    sdf: DataFrame,
-    order_by: list[str | Column],
-    value_cols: list[str],
-    aggs: list[str],
-    min_periods: int = 1,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Frame-level pandas ``expanding()`` for MANY columns through ONE
-    bucket plan: every column's running (count + per-agg moments)
-    share the single balanced exchange and one driver prefix-combine
-    of per-bucket totals — never one plan per column. std/var use the
-    double-cast, per-column GLOBAL-MEAN-shifted moments (identical
-    numerics to :func:`with_global_expanding`: overflow-free squares,
-    no large-mean cancellation; one extra scalar agg computes all the
-    centers at once). Expanding null semantics: every row carries the
-    running value, masked null until ``min_periods`` non-null
-    observations (count's gate is the ROW position, the pandas quirk).
-    Adds one ``{col}__expanding_{agg}`` column per (col, agg)."""
-    for a in aggs:
-        if a not in ("sum", "mean", "min", "max", "count", "std", "var"):
-            raise ValueError(f"unsupported expanding agg {a!r}")
-    need_m2 = any(a in ("std", "var") for a in aggs)
-    centers: dict[str, float] = {}
-    if need_m2:
-        row = sdf.agg(
-            *[F.avg(F.col(c).cast("double")).alias(c) for c in value_cols]
-        ).first()
-        centers = {c: (float(row[c]) if row[c] is not None else 0.0)
-                   for c in value_cols}
-
-    # tasks: (slot, input expr, combine kind); count is always present
-    # per column (the min_periods gate)
-    tasks: list[tuple[str, Column, str]] = []
-    for c in value_cols:
-        raw = F.col(c)
-        tasks.append((f"{c}__cnt", raw, "count"))
-        wanted = set(aggs)
-        if "mean" in wanted:
-            wanted.add("sum")
-        if wanted & {"std", "var"}:
-            sh = raw.cast("double") - F.lit(centers.get(c, 0.0))
-            tasks.append((f"{c}__sumsh", sh, "sum"))
-            tasks.append((f"{c}__sumsq", sh * sh, "sum"))
-        for a in ("sum", "min", "max"):
-            if a in wanted:
-                tasks.append((f"{c}__{a}", raw, a))
-
-    fns = {"sum": F.sum, "min": F.min, "max": F.max, "count": F.count}
-    ranked, bucket, totals, _boff = _ranked_bucket_stats(
-        sdf,
-        order_by,
-        [fns[k](e).alias(s) for s, e, k in tasks],
-        partitions,
-    )
-    w = (
-        Window.partitionBy(bucket)
-        .orderBy("__g__")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = ranked
-    runs: dict[str, Column] = {}
-    for s, e, kind in tasks:
-        within = fns[kind](e).over(w)
-        offsets: dict[int, object] = {}
-        acc: object = 0 if kind in ("sum", "count") else None
-        for r in totals:
-            if acc is not None:
-                offsets[r["__b__"]] = acc
-            t = r[s]
-            if t is None:
-                continue
-            if kind in ("sum", "count"):
-                acc = acc + t
-            elif acc is None:
-                acc = t
-            else:
-                acc = max(acc, t) if kind == "max" else min(acc, t)
-        if offsets:
-            off_map = F.create_map(
-                *[F.lit(v) for kv in offsets.items() for v in kv]
-            )
-            if kind in ("sum", "count"):
-                run = F.coalesce(off_map[bucket], F.lit(0)) + F.coalesce(
-                    within, F.lit(0)
-                )
-            elif kind == "max":
-                run = F.greatest(off_map[bucket], within)
-            else:
-                run = F.least(off_map[bucket], within)
-        else:
-            run = within
-        runs[s] = run
-    ok_count = F.col("__g__") >= F.lit(min_periods)
-    for c in value_cols:
-        seen = runs[f"{c}__cnt"]
-        ok = seen >= F.lit(min_periods)
-        for a in aggs:
-            if a == "count":
-                expr = F.when(ok_count, seen.cast("double"))
-            elif a == "mean":
-                expr = F.when(ok, runs[f"{c}__sum"] / seen)
-            elif a in ("std", "var"):
-                m2 = F.greatest(
-                    runs[f"{c}__sumsq"]
-                    - runs[f"{c}__sumsh"] * runs[f"{c}__sumsh"] / seen,
-                    F.lit(0.0),
-                )
-                v = m2 / (seen - 1)
-                v = F.sqrt(v) if a == "std" else v
-                expr = F.when(ok & (seen >= 2), v)
-            else:
-                expr = F.when(ok, runs[f"{c}__{a}"])
-            out = out.withColumn(f"{c}__expanding_{a}", expr)
-    return out.drop("__g__", "__b__")
 
 
 def with_global_fill(
@@ -1385,43 +1184,6 @@ def with_global_rolling_apply(
     return out.filter(~F.col("__pad__")).drop("__b__", "__pad__", "__g__")
 
 
-def with_global_rolling_multi(
-    sdf: DataFrame,
-    order_by: "list[str | Column]",
-    value_cols: "list[str]",
-    window: int,
-    aggs: "list[str]",
-    min_periods: "int | None" = None,
-    partitions: "int | None" = None,
-) -> DataFrame:
-    """Row-based rolling aggregates over the GLOBAL order for MANY
-    columns at once — the bucket-overlap plan of
-    :func:`with_global_rolling` (one balanced exchange) paid a single
-    time for the whole column set. Adds ``{col}__rolling_{agg}`` per
-    (column, agg); min_periods counts each column's OWN non-null
-    observations (pandas semantics)."""
-    fn_map = {
-        "sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
-        "count": F.count, "std": F.stddev_samp, "var": F.var_samp,
-    }
-    bad = [a for a in aggs if a not in fn_map]
-    if bad:
-        raise ValueError(f"unsupported rolling aggs {bad}; one of {sorted(fn_map)}")
-    if window < 1:
-        raise ValueError("window must be >= 1")
-    mp = window if min_periods is None else min_periods
-    un, w = _bucketed_frame(sdf, order_by, window, partitions)
-    out = un
-    for c in value_cols:
-        cnt = F.count(F.col(c)).over(w)
-        for a in aggs:
-            expr = fn_map[a](F.col(c)).over(w)
-            out = out.withColumn(
-                f"{c}__rolling_{a}", F.when(cnt >= F.lit(mp), expr)
-            )
-    return out.filter(~F.col("__pad__")).drop("__b__", "__pad__", "__g__")
-
-
 def keyed_midranks(
     per: DataFrame,
     key_col: str,
@@ -1459,11 +1221,7 @@ def keyed_midranks(
         partitions,
         extra_keys=[F.col(key_col)],
     )
-    w = (
-        Window.partitionBy(bucket)
-        .orderBy("__g__")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = _running(bucket)
     bucket_tot: dict = {}
     key_tot: dict = {}
     for r in totals:

@@ -255,7 +255,7 @@ def sample_to_token_budget(
     ``group_col`` is given — the window is a streaming prefix sum, no
     per-group state beyond the accumulator, no driver data, and AQE
     splits skewed groups. WITHOUT a group the global prefix sum uses
-    the windowless bucket plan of ``ranking.with_global_cumsum``
+    the windowless bucket plan of ``ranking.with_global_cumagg``
     (range-bucketed positions + driver-combined bucket offsets) — no
     single-partition window at any scale. Rows with non-positive cost
     pass through free (they never consume budget).
@@ -270,11 +270,13 @@ def sample_to_token_budget(
     while tmp in sdf.columns:
         tmp += "_"
     if group_col is None:
-        from .ranking import with_global_cumsum
+        from .ranking import with_global_cumagg
 
         kcol, ccol = tmp + "k", tmp + "c"
         staged = sdf.withColumn(kcol, key).withColumn(ccol, cost)
-        out = with_global_cumsum(staged, [kcol, id_col], ccol, out_col=tmp)
+        out = with_global_cumagg(
+            staged, [kcol, id_col], [(ccol, "sum", tmp)]
+        )
         return out.filter(F.col(tmp) <= float(budget)).drop(kcol, ccol, tmp)
     w = (
         Window.partitionBy(group_col)
@@ -390,7 +392,7 @@ def allocate_budget(
     with fractional double allocations; integer rounding policy is the
     caller's.
     """
-    from .ranking import with_global_cumagg_multi
+    from .ranking import with_global_cumagg
 
     if total < 0:
         raise ValueError("total must be >= 0")
@@ -403,7 +405,7 @@ def allocate_budget(
         "domain", "w", "cap", F.lit(0.0).alias("alloc")
     )
     pos = base.filter(F.col("w") > 0).withColumn("r", F.col("cap") / F.col("w"))
-    cum = with_global_cumagg_multi(
+    cum = with_global_cumagg(
         pos,
         ["r", "domain"],
         [("cap", "sum", "cum_cap"), ("w", "sum", "cum_w")],

@@ -146,7 +146,7 @@ def rank_transform(
     bucket prefix-sum turns them into midranks, and a distinct-sized
     join maps them back (the spearman_corr plan, applied to one
     column)."""
-    from .ranking import with_global_cumsum
+    from .ranking import with_global_cumagg
 
     v = F.col(col).cast("double")
     per = (
@@ -155,7 +155,7 @@ def rank_transform(
         .groupBy("__v__")
         .agg(F.count(F.lit(1)).alias("__n__"))
     )
-    cum = with_global_cumsum(per, ["__v__"], "__n__", out_col="__cum__")
+    cum = with_global_cumagg(per, ["__v__"], [("__n__", "sum", "__cum__")])
     tot = per.agg(F.sum("__n__").cast("double").alias("__nt__"))
     mid = (F.col("__cum__") - F.col("__n__")) + (F.col("__n__") + 1) / 2.0
     ranks = cum.crossJoin(F.broadcast(tot)).select(

@@ -482,23 +482,22 @@ def seasonal_decompose(
     # trailing MA, full-window gate; min_periods=window also nulls any
     # window containing a null (statsmodels propagates edge NaNs)
     rolled = with_global_rolling(
-        ranked, ["__pos__"], "__v__", period, ["mean"], min_periods=period,
+        ranked, ["__pos__"], ["__v__"], period, ["mean"], min_periods=period,
         partitions=partitions, dense_total=n_rows,
-    ).withColumnRenamed("rolling_mean", "__ma__")
+    ).withColumnRenamed("__v____rolling_mean", "__ma__")
     if period % 2 == 0:
         rolled = with_global_rolling(
-            rolled, ["__pos__"], "__ma__", 2, ["mean"], min_periods=2,
+            rolled, ["__pos__"], ["__ma__"], 2, ["mean"], min_periods=2,
             partitions=partitions, dense_total=n_rows,
-        ).drop("__ma__").withColumnRenamed("rolling_mean", "__ma__")
+        ).drop("__ma__").withColumnRenamed("__ma____rolling_mean", "__ma__")
     rolled = rolled.withColumn(
         "__phase__", ((F.col("__pos__") - 1) % period).cast("int")
     )
     # realign the trailing average onto the window center: the value h
     # positions AHEAD (negative shift) is this row's centered trend
     trended = with_global_shift(
-        rolled, ["__pos__"], "__ma__", periods=-h, out_col="__trend__",
-        dense_pos=True,
-    ).drop("__ma__")
+        rolled, ["__pos__"], ["__ma__"], periods=-h, dense_pos=True,
+    ).drop("__ma__").withColumnRenamed("__ma____prev__", "__trend__")
     det = trended.withColumn(
         "__det__", F.col("__v__") - F.col("__trend__")
     )

@@ -231,46 +231,24 @@ def ewm_kernel_width(alpha: float, tol: float = 1e-16) -> int:
     return int(_m.ceil(_m.log(tol) / _m.log(d)))
 
 
-def _ewm_mean_expr(col: Column, d: float, w, min_periods: int) -> Column:
-    """Weighted-mean expression over a bounded ordered window frame:
-    collect the frame's values + a null mask as aligned arrays (nulls
-    keep their slot so weights advance over gaps — pandas
-    ignore_na=False), then one JVM-side higher-order fold:
-    ``sum(v_i * m_i * d^(n-i)) / sum(m_i * d^(n-i))``. No Python, no
-    UDF; array length is the (bounded) kernel width."""
-    vals = F.collect_list(F.coalesce(col.cast("double"), F.lit(0.0))).over(w)
-    mask = F.collect_list(
-        F.when(col.isNotNull(), F.lit(1.0)).otherwise(F.lit(0.0))
-    ).over(w)
-    n = F.size(vals)
-    wts = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.pow(F.lit(d), (n - i).cast("double")),
-    )
-    vm = F.zip_with(vals, mask, lambda v, m: v * m)
-    num = F.aggregate(
-        F.zip_with(vm, wts, lambda v, x: v * x), F.lit(0.0), lambda a, x: a + x
-    )
-    den = F.aggregate(
-        F.zip_with(mask, wts, lambda m, x: m * x), F.lit(0.0), lambda a, x: a + x
-    )
-    cnt = F.aggregate(mask, F.lit(0.0), lambda a, x: a + x)
-    return F.when((den != 0) & (cnt >= F.lit(float(min_periods))), num / den)
-
-
-def _ewm_var_expr(
-    col: Column, d: float, w, min_periods: int, std: bool = False
+def _ewm_expr(
+    col: Column, d: float, w, min_periods: int, stat: str = "mean"
 ) -> Column:
-    """Weighted-variance expression (pandas ``ewm().var()``,
-    adjust=True, bias=False, ignore_na=False) over the bounded frame:
-    the same aligned value/mask arrays + truncated-kernel weights as
-    :func:`_ewm_mean_expr`, with the moments folded about the CURRENT
-    row's value (variance is shift invariant; the shift keeps the
-    ``swxx - swx^2/sw`` difference small-magnitude for large-mean
-    data). Unbiased via the standard reliability correction
-    ``sw^2 / (sw^2 - sum(w^2))``; fewer than 2 observations (or all
-    weight on one observation) -> null, matching pandas."""
-    cur = F.coalesce(col.cast("double"), F.lit(0.0))
+    """Exponentially weighted ``stat`` (mean/var/std; pandas adjust=True,
+    bias=False, ignore_na=False) over a bounded ordered window frame:
+    collect the frame's values + a null mask as aligned arrays (nulls
+    keep their slot so weights advance over gaps), then JVM-side
+    higher-order folds against the truncated-kernel weights
+    ``d^(n-i)``. No Python, no UDF; array length is the (bounded)
+    kernel width.
+
+    mean: ``sum(v_i * w_i) / sum(w_i)`` over the masked weights. var/
+    std fold the moments about the CURRENT row's value (variance is
+    shift invariant; the shift keeps the ``swxx - swx^2/sw`` difference
+    small-magnitude for large-mean data), unbiased via the standard
+    reliability correction ``sw^2 / (sw^2 - sum(w^2))``; fewer than 2
+    observations (or all weight on one observation) -> null, matching
+    pandas."""
     vals = F.collect_list(F.coalesce(col.cast("double"), F.lit(0.0))).over(w)
     mask = F.collect_list(
         F.when(col.isNotNull(), F.lit(1.0)).otherwise(F.lit(0.0))
@@ -282,6 +260,14 @@ def _ewm_var_expr(
     )
     wm = F.zip_with(mask, wts, lambda m, x: m * x)
     sw = F.aggregate(wm, F.lit(0.0), lambda a, x: a + x)
+    cnt = F.aggregate(mask, F.lit(0.0), lambda a, x: a + x)
+    if stat == "mean":
+        num = F.aggregate(
+            F.zip_with(vals, wm, lambda v, x: v * x),
+            F.lit(0.0), lambda a, x: a + x,
+        )
+        return F.when((sw != 0) & (cnt >= F.lit(float(min_periods))), num / sw)
+    cur = F.coalesce(col.cast("double"), F.lit(0.0))
     sw2 = F.aggregate(wm, F.lit(0.0), lambda a, x: a + x * x)
     swx = F.aggregate(
         F.zip_with(vals, wm, lambda v, x: (v - cur) * x),
@@ -291,7 +277,6 @@ def _ewm_var_expr(
         F.zip_with(vals, wm, lambda v, x: (v - cur) * (v - cur) * x),
         F.lit(0.0), lambda a, x: a + x,
     )
-    cnt = F.aggregate(mask, F.lit(0.0), lambda a, x: a + x)
     biased = F.greatest(
         swxx / sw - (swx / sw) * (swx / sw), F.lit(0.0)
     )
@@ -300,97 +285,7 @@ def _ewm_var_expr(
         (cnt >= F.lit(float(max(min_periods, 2)))) & (denom > 0),
         biased * sw * sw / denom,
     )
-    return F.sqrt(var) if std else var
-
-
-def _ewm_global_arrow(
-    sdf, phys_idx: list, phys_col: str, a: float, W: int,
-    min_periods: int, name: str, stat: str,
-):
-    """Arrow engine for the GLOBAL-order ewm family: pandas' C ewm
-    kernel per padded bucket. The bucketed frame replicates the last
-    ``W`` rows of each bucket forward as burn-in, so each bucket's
-    slice carries at least the tol-truncated kernel of history — the
-    SAME approximation contract as the window engine, at O(1) per row
-    instead of O(W) interpreted higher-order folds (measured: span=20
-    / W=369 on 150k rows, 122s window vs ~1s arrow). Pad rows are
-    dropped after the kernel runs."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .ranking import _bucketed_frame
-
-    un, _w = _bucketed_frame(sdf, phys_idx, W + 1)
-    out_schema = T.StructType(
-        list(un.schema.fields) + [T.StructField(name, T.DoubleType(), True)]
-    )
-
-    def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__g__", kind="mergesort")
-        proxy = pdf[phys_col].ewm(alpha=a, min_periods=min_periods)
-        pdf[name] = getattr(proxy, stat)()
-        return pdf
-
-    res = un.groupBy("__b__").applyInPandas(_fn, out_schema)
-    return res.filter(~F.col("__pad__")).drop("__b__", "__pad__", "__g__")
-
-
-def ewm_var_global(
-    df: "DataFrame",
-    col: str,
-    *,
-    alpha: float | None = None,
-    span: float | None = None,
-    halflife: float | None = None,
-    com: float | None = None,
-    min_periods: int = 0,
-    tol: float = 1e-16,
-    max_kernel: int = 8192,
-    out_col: str | None = None,
-    std: bool = False,
-) -> "DataFrame":
-    """Exponentially weighted variance (``std=True`` for the standard
-    deviation) over the GLOBAL index order — pandas
-    ``Series.ewm().var()/.std()`` on the same truncated-kernel
-    bucket-overlap plan as :func:`ewm_mean_global` (no
-    single-partition window); the anomaly-band twin of the ewm mean."""
-    from ..frame import DataFrame as EDF
-    from ..schema import Field
-    from .ranking import _bucketed_frame
-    from pyspark.sql import types as T
-
-    a = resolve_ewm_alpha(alpha, span, halflife, com)
-    d = 1.0 - a
-    W = ewm_kernel_width(a, tol)
-    if W > max_kernel:
-        raise ValueError(
-            f"ewm kernel width {W} exceeds max_kernel={max_kernel}; "
-            "use a faster decay (larger alpha) or a grouped ewm"
-        )
-    schema = df._schema
-    icols = list(df.index_cols)
-    if not icols:
-        raise ValueError("ewm needs an index for row order")
-    name = out_col or f"{col}_ewm_{'std' if std else 'var'}"
-    phys_idx = [schema.resolve_any(c) for c in icols]
-    if W <= 8:
-        un, w = _bucketed_frame(df._sdf, phys_idx, W + 1)
-        out = (
-            un.withColumn(
-                name,
-                _ewm_var_expr(
-                    F.col(schema.resolve(col)), d, w, min_periods, std=std
-                ),
-            )
-            .filter(~F.col("__pad__"))
-            .drop("__b__", "__pad__", "__g__")
-        )
-    else:
-        out = _ewm_global_arrow(
-            df._sdf, phys_idx, schema.resolve(col), a, W, min_periods,
-            name, "std" if std else "var",
-        )
-    return EDF(out, schema.with_field(Field(name, name, T.DoubleType(), True)))
+    return F.sqrt(var) if stat == "std" else var
 
 
 def ewm_mean_grouped(
@@ -464,15 +359,9 @@ def ewm_mean_grouped(
         out = df._sdf
         sch = schema
         for c, name in zip(cols, names):
-            expr = (
-                _ewm_mean_expr(F.col(schema.resolve(c)), d, w, min_periods)
-                if stat == "mean"
-                else _ewm_var_expr(
-                    F.col(schema.resolve(c)), d, w, min_periods,
-                    std=(stat == "std"),
-                )
+            out = out.withColumn(
+                name, _ewm_expr(F.col(schema.resolve(c)), d, w, min_periods, stat)
             )
-            out = out.withColumn(name, expr)
             sch = sch.with_field(Field(name, name, T.DoubleType(), True))
         return EDF(out, sch)
 
@@ -505,61 +394,71 @@ def ewm_mean_grouped(
     return EDF(res, Schema(flds, tuple(icols)))
 
 
-def ewm_mean_global(
-    df: "DataFrame",
-    col: str,
+def ewm_global(
+    sdf,
+    order_by: list[str],
+    value_cols: list[str],
     *,
     alpha: float | None = None,
     span: float | None = None,
     halflife: float | None = None,
     com: float | None = None,
     min_periods: int = 0,
-    tol: float = 1e-16,
-    max_kernel: int = 8192,
-    out_col: str | None = None,
-) -> "DataFrame":
-    """Exponentially weighted mean over the GLOBAL index order (pandas
-    ``Series.ewm().mean()``) without a single-partition window: the
-    truncated kernel (see :func:`ewm_mean_grouped`) bounds the lookback,
-    so the bucket-overlap scaffolding behind global rolling applies —
-    positions bucketed, ``W`` boundary rows replicated forward, one
-    balanced hash exchange. Kernels wider than ``max_kernel`` raise
-    (use a faster decay, or group the data)."""
-    from ..frame import DataFrame as EDF
-    from ..schema import Field, Schema
-    from .ranking import _bucketed_frame
+    stat: str = "mean",
+):
+    """Exponentially weighted ``stat`` (``mean``/``var``/``std``; pandas
+    ``ewm()``, adjust=True, bias=False, ignore_na=False) over the GLOBAL
+    order for every column in ``value_cols``, each overwritten in place
+    with its DOUBLE result — the ONE global ewm kernel behind
+    ``Series.ewm`` and ``DataFrame.ewm``. No single-partition window:
+    the truncated kernel (see :func:`ewm_kernel_width`) bounds the
+    lookback, so the bucketed padded frame of global rolling applies —
+    positions bucketed, ``W`` boundary rows replicated forward as
+    burn-in, one balanced hash exchange for the whole column set.
+    Kernels wider than 8192 raise (use a faster decay, or group the
+    data).
+
+    Engine choice is per kernel width ``W``: up to 8 lags the JVM
+    higher-order folds of :func:`_ewm_expr`; beyond that pandas' C ewm
+    kernel per padded bucket (one Arrow-batched applyInPandas) — the
+    window engine re-materializes the W-row frame per row and folds it
+    interpreted, O(W) per row (measured: span=20 / W=369 on 150k rows,
+    122 s window vs ~1 s arrow). Both engines keep the same
+    tol-truncated-kernel approximation contract."""
     from pyspark.sql import types as T
 
+    from .ranking import _bucketed_frame
+
+    if stat not in ("mean", "var", "std"):
+        raise ValueError(f"stat must be mean|var|std, got {stat!r}")
     a = resolve_ewm_alpha(alpha, span, halflife, com)
-    d = 1.0 - a
-    W = ewm_kernel_width(a, tol)
-    if W > max_kernel:
+    W = ewm_kernel_width(a)
+    if W > 8192:
         raise ValueError(
-            f"ewm kernel width {W} exceeds max_kernel={max_kernel}; "
+            f"ewm kernel width {W} exceeds max_kernel=8192; "
             "use a faster decay (larger alpha) or a grouped ewm"
         )
-    schema = df._schema
-    icols = list(df.index_cols)
-    if not icols:
-        raise ValueError("ewm needs an index for row order")
-    name = out_col or f"{col}_ewm"
-    phys_idx = [schema.resolve_any(c) for c in icols]
+    un, w = _bucketed_frame(sdf, order_by, W + 1)
     if W <= 8:
-        un, w = _bucketed_frame(df._sdf, phys_idx, W + 1)
-        out = (
-            un.withColumn(
-                name,
-                _ewm_mean_expr(F.col(schema.resolve(col)), d, w, min_periods),
-            )
-            .filter(~F.col("__pad__"))
-            .drop("__b__", "__pad__", "__g__")
-        )
+        out = un.withColumns({
+            c: _ewm_expr(F.col(c), 1.0 - a, w, min_periods, stat)
+            for c in value_cols
+        })
     else:
-        # wide kernel: pandas C kernel per padded bucket (see
-        # _ewm_global_arrow) — the window engine's interpreted O(W)
-        # per-row folds are ~100x slower there
-        out = _ewm_global_arrow(
-            df._sdf, phys_idx, schema.resolve(col), a, W, min_periods,
-            name, "mean",
-        )
-    return EDF(out, schema.with_field(Field(name, name, T.DoubleType(), True)))
+        import pandas as pd
+
+        out_schema = T.StructType([
+            T.StructField(f.name, T.DoubleType(), True)
+            if f.name in value_cols else f
+            for f in un.schema.fields
+        ])
+
+        def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            pdf = pdf.sort_values("__g__", kind="mergesort")
+            for c in value_cols:
+                proxy = pdf[c].ewm(alpha=a, min_periods=min_periods)
+                pdf[c] = getattr(proxy, stat)()
+            return pdf
+
+        out = un.groupBy("__b__").applyInPandas(_fn, out_schema)
+    return out.filter(~F.col("__pad__")).drop("__b__", "__pad__", "__g__")

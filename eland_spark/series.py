@@ -721,10 +721,11 @@ class Series:
         from .operators.ranking import with_global_shift
 
         base, icols = self._ordered_frame()
-        out = with_global_shift(base, icols, "__val__", lag, out_col="__prev__")
+        out = with_global_shift(base, icols, ["__val__"], lag)
         return out.agg(
             F.corr(
-                F.col("__val__").cast("double"), F.col("__prev__").cast("double")
+                F.col("__val__").cast("double"),
+                F.col("__val____prev__").cast("double"),
             ).alias("v")
         ).collect()[0]["v"]
 
@@ -1134,45 +1135,32 @@ class Series:
         (operators/ranking.with_global_shift) — one balanced hash
         shuffle on the dense position key, no empty-PARTITION-BY
         window."""
-        from .frame import DataFrame as EDF
-        from .operators.ranking import with_global_shift
-
-        base, icols = self._ordered_frame()
-        out = with_global_shift(base, icols, "__val__", periods, out_col="shift")
-        return EDF(out.select(*icols, "shift"), index_cols=tuple(icols))
+        return self._order_op("shift", periods)
 
     def diff(self, periods: int = 1):
         """pandas ``Series.diff``: value minus the value ``periods``
         rows earlier in the global index order (same windowless plan as
         :meth:`shift`)."""
-        from .frame import DataFrame as EDF
-        from .operators.ranking import with_global_shift
-
-        base, icols = self._ordered_frame()
-        out = with_global_shift(base, icols, "__val__", periods, out_col="__prev__")
-        return EDF(
-            out.select(
-                *icols, (F.col("__val__") - F.col("__prev__")).alias("diff")
-            ),
-            index_cols=tuple(icols),
-        )
+        return self._order_op("diff", periods)
 
     def pct_change(self, periods: int = 1):
         """pandas ``Series.pct_change``: fractional change vs the value
         ``periods`` rows earlier (same windowless plan as
-        :meth:`shift`); division by zero yields null like pandas inf ->
-        the caller decides."""
+        :meth:`shift`); IEEE division like ``DataFrame.pct_change``
+        (prev 0 -> ±inf, 0/0 -> NaN, never an ANSI error)."""
+        return self._order_op("pct_change", periods)
+
+    def _order_op(self, how: str, periods: int = 1):
+        """The frame-level global-order op on this one column (shared
+        kernel call, see ``frame._global_order_op``), result named
+        ``how``."""
         from .frame import DataFrame as EDF
-        from .operators.ranking import with_global_shift
+        from .frame import _global_order_op
 
         base, icols = self._ordered_frame()
-        out = with_global_shift(base, icols, "__val__", periods, out_col="__prev__")
+        out = _global_order_op(base, icols, ["__val__"], how, periods)
         return EDF(
-            out.select(
-                *icols,
-                (F.col("__val__") / F.col("__prev__") - 1).alias("pct_change"),
-            ),
-            index_cols=tuple(icols),
+            out.withColumnRenamed("__val__", how), index_cols=tuple(icols)
         )
 
     def interpolate(self, method: str = "linear", limit: int | None = None):
@@ -1206,7 +1194,7 @@ class Series:
         """pandas ``Series.expanding()`` over the global index order:
         lazy proxy with ``sum/mean/min/max/count/std/var`` — each compiles to
         the windowless cumulative-agg bucket plan
-        (operators/ranking.with_global_cumagg); results are null until
+        (operators/ranking.with_global_expanding); results are null until
         ``min_periods`` non-null observations have been seen."""
         return _Expanding(self, min_periods)
 
@@ -1239,8 +1227,8 @@ class Series:
         from .operators.ranking import with_global_shift
 
         base, icols = self._ordered_frame()
-        out = with_global_shift(base, icols, "__val__", 1, out_col="__prev__")
-        cur, prev = F.col("__val__"), F.col("__prev__")
+        out = with_global_shift(base, icols, ["__val__"], 1)
+        cur, prev = F.col("__val__"), F.col("__val____prev__")
         ok = (cur >= prev) if increasing else (cur <= prev)
         row = out.agg(
             F.coalesce(
@@ -1273,18 +1261,9 @@ class Series:
         the kernel width where weights fall below double precision
         (exact), so the global sequential dependency becomes a bounded
         lookback — computed with the same bucket-overlap plan as
-        rolling (operators/windowed.ewm_mean_global), one balanced hash
+        rolling (operators/windowed.ewm_global), one balanced hash
         exchange, no single-partition window."""
         return _Ewm(self, alpha, span, halflife, com, min_periods)
-
-    def _cumagg(self, agg: str):
-        from .frame import DataFrame as EDF
-        from .operators.ranking import with_global_cumagg
-
-        base, icols = self._ordered_frame()
-        name = f"cum{agg}"
-        out = with_global_cumagg(base, icols, "__val__", agg, out_col=name)
-        return EDF(out.select(*icols, name), index_cols=tuple(icols))
 
     def cumsum(self):
         """pandas ``Series.cumsum`` over the global index order (skipna
@@ -1292,24 +1271,24 @@ class Series:
         at scale: position buckets + one balanced hash exchange + a
         driver prefix-sum of per-bucket totals
         (operators/ranking.with_global_cumagg)."""
-        return self._cumagg("sum")
+        return self._order_op("cumsum")
 
     def cummax(self):
         """pandas ``Series.cummax`` — same windowless bucket plan as
         :meth:`cumsum` with a prefix-max combine."""
-        return self._cumagg("max")
+        return self._order_op("cummax")
 
     def cummin(self):
         """pandas ``Series.cummin`` — same windowless bucket plan as
         :meth:`cumsum` with a prefix-min combine."""
-        return self._cumagg("min")
+        return self._order_op("cummin")
 
     def cumprod(self):
         """pandas ``Series.cumprod`` (skipna) — the cumsum bucket plan
         with a TRUE running product (``F.product`` within buckets,
         driver prefix-multiply across them): zeros and signs exact, no
         log/exp detour."""
-        return self._cumagg("prod")
+        return self._order_op("cumprod")
 
     def map(self, arg) -> "Series":
         """pandas ``Series.map`` with a dict/Mapping: compiled to a JVM
@@ -2613,10 +2592,13 @@ class _Rolling:
 
         base, icols = self._series._ordered_frame()
         out = with_global_rolling(
-            base, icols, "__val__", self._window, [agg], self._min_periods
+            base, icols, ["__val__"], self._window, [agg], self._min_periods
         )
         return EDF(
-            out.select(*icols, f"rolling_{agg}"), index_cols=tuple(icols)
+            out.select(
+                *icols, F.col(f"__val____rolling_{agg}").alias(f"rolling_{agg}")
+            ),
+            index_cols=tuple(icols),
         )
 
     def sum(self):
@@ -2766,10 +2748,14 @@ class _Expanding:
 
         base, icols = self._series._ordered_frame()
         out = with_global_expanding(
-            base, icols, "__val__", [agg], self._min_periods
+            base, icols, ["__val__"], [agg], self._min_periods
         )
         return EDF(
-            out.select(*icols, f"expanding_{agg}"), index_cols=tuple(icols)
+            out.select(
+                *icols,
+                F.col(f"__val____expanding_{agg}").alias(f"expanding_{agg}"),
+            ),
+            index_cols=tuple(icols),
         )
 
     def sum(self):
@@ -2817,32 +2803,26 @@ class _Ewm:
         )
 
     def mean(self):
-        from .frame import DataFrame as EDF
-        from .operators.windowed import ewm_mean_global
-
-        base, icols = self._s._ordered_frame()
-        edf = EDF(base, index_cols=tuple(icols))
-        out = ewm_mean_global(edf, "__val__", out_col="ewm", **self._kw)
-        return out[["ewm"]]
+        """pandas ``ewm().mean()`` — column ``ewm``."""
+        return self._run("mean", "ewm")
 
     def var(self):
         """pandas ``ewm().var()`` (adjust=True, bias=False) on the
         truncated-kernel bucket-overlap plan — column ``ewm_var``."""
-        return self._var(std=False)
+        return self._run("var", "ewm_var")
 
     def std(self):
         """pandas ``ewm().std()`` — sqrt of :meth:`var`; column
         ``ewm_std``."""
-        return self._var(std=True)
+        return self._run("std", "ewm_std")
 
-    def _var(self, std: bool):
+    def _run(self, stat: str, name: str):
         from .frame import DataFrame as EDF
-        from .operators.windowed import ewm_var_global
+        from .operators.windowed import ewm_global
 
         base, icols = self._s._ordered_frame()
-        edf = EDF(base, index_cols=tuple(icols))
-        name = "ewm_std" if std else "ewm_var"
-        out = ewm_var_global(
-            edf, "__val__", out_col=name, std=std, **self._kw
+        out = ewm_global(base, icols, ["__val__"], stat=stat, **self._kw)
+        return EDF(
+            out.select(*icols, F.col("__val__").alias(name)),
+            index_cols=tuple(icols),
         )
-        return out[[name]]

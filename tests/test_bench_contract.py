@@ -99,6 +99,11 @@ def test_vs_committed_digest():
     d2 = bench._vs_committed({"q": 0.15}, {"q": 0.05})
     assert d2["n_regressed"] == 0
     assert bench._vs_committed({"q": 1.0}, {}) == {"n_common": 0}
+    # a committed 0.0 s has no ratio: skipped on purpose (no division
+    # by zero), while its positive neighbours still count
+    d3 = bench._vs_committed({"z": 0.3, "q": 1.0}, {"z": 0.0, "q": 1.0})
+    assert d3["n_common"] == 1 and d3["n_regressed"] == 0
+    assert bench._vs_committed({"z": 0.3}, {"z": 0.0}) == {"n_common": 0}
 
 
 def test_compare_recovers_from_truncated_driver_tail():

@@ -318,6 +318,15 @@ def test_ewm_mean_matches_pandas(spark, orders_pd):
     s = edf["o_totalprice"].ewm(span=20).mean().to_pandas().sort_index()
     ps = pdf["o_totalprice"].ewm(span=20).mean().sort_index()
     assert np.allclose(s["ewm"].to_numpy(), ps.to_numpy())
+    # global frame ewm: the same kernel and engine choice as the Series
+    # (span=20 -> W=369 runs pandas' C kernel per padded bucket)
+    f = (
+        edf[["o_custkey", "o_totalprice"]].ewm(span=20).mean()
+        .to_pandas().sort_index()
+    )
+    pf = pdf[["o_custkey", "o_totalprice"]].ewm(span=20).mean().sort_index()
+    for c in ("o_custkey", "o_totalprice"):
+        assert np.allclose(f[c].to_numpy(), pf[c].to_numpy()), c
 
 
 def test_ewm_param_resolution_and_errors(spark):
@@ -337,22 +346,75 @@ def test_ewm_param_resolution_and_errors(spark):
 # ------------------------------------------ frame-wide global-order ops
 
 
-def test_frame_order_ops_match_pandas(spark, orders_pd):
-    pdf = orders_pd.set_index("o_orderkey").sort_index()
-    edf = es.read_parquet(
-        spark, "/root/testdata/sf0.001/orders.parquet", index_col="o_orderkey"
+def test_frame_order_ops_match_pandas(spark):
+    """Every global-order op runs on the frame AND on each of its
+    Series (one kernel per op behind both fronts) against pandas.
+    ``zn`` is an integer column holding zeros and nulls: pct_change
+    over a zero prior is pandas' ±inf/NaN on both fronts (never an ANSI
+    DIVIDE_BY_ZERO), and nulls skip or carry per op like pandas."""
+    from operator import methodcaller
+
+    from pyspark.sql import functions as F
+
+    k = F.col("o_orderkey")
+    sdf = spark.read.parquet("/root/testdata/sf0.001/orders.parquet").select(
+        "o_orderkey",
+        "o_custkey",
+        "o_totalprice",
+        F.when(k % 7 == 0, F.lit(None))
+        .otherwise(F.col("o_custkey") % 4)
+        .cast("long")
+        .alias("zn"),
     )
-    num = edf[["o_custkey", "o_totalprice"]]
-    pnum = pdf[["o_custkey", "o_totalprice"]]
-    for m in ("shift", "diff", "pct_change", "cumsum", "cummax", "cummin"):
-        g = getattr(num, m)().to_pandas().sort_index()
-        w = getattr(pnum, m)().sort_index()
-        for c in ("o_custkey", "o_totalprice"):
-            assert np.allclose(
-                g[c].astype(float).to_numpy(),
-                w[c].astype(float).to_numpy(),
-                equal_nan=True,
-            ), (m, c)
+    edf = es.DataFrame(sdf, index_cols=("o_orderkey",))
+    pnum = sdf.toPandas().set_index("o_orderkey").sort_index().astype(float)
+    assert (pnum["zn"] == 0).any() and pnum["zn"].isna().any()
+
+    def same(a, b):
+        # fronts return the Spark dtype (ints stay ints); pandas here
+        # runs on floats — compare values
+        return np.allclose(
+            a.astype(float).to_numpy(), b.astype(float).to_numpy(),
+            equal_nan=True,
+        )
+
+    cases = [  # (Series result column, op on a frame/Series, pandas op)
+        ("shift", methodcaller("shift"), methodcaller("shift")),
+        ("diff", methodcaller("diff"), methodcaller("diff")),
+        (
+            "pct_change",
+            methodcaller("pct_change"),
+            methodcaller("pct_change", fill_method=None),
+        ),
+    ]
+    for m in ("cumsum", "cummax", "cummin", "cumprod"):
+        cases.append((m, methodcaller(m), methodcaller(m)))
+    for a in ("sum", "mean", "std"):
+        cases.append((
+            f"rolling_{a}",
+            lambda d, a=a: getattr(d.rolling(3), a)(),
+            lambda p, a=a: getattr(p.rolling(3), a)(),
+        ))
+        cases.append((
+            f"expanding_{a}",
+            lambda d, a=a: getattr(d.expanding(), a)(),
+            lambda p, a=a: getattr(p.expanding(), a)(),
+        ))
+    # ewm: alpha=0.995 (W=8) takes the window engine, span=3 (W=54)
+    # the Arrow engine
+    for kw in ({"alpha": 0.995}, {"span": 3}):
+        cases.append((
+            "ewm",
+            lambda d, kw=kw: d.ewm(**kw).mean(),
+            lambda p, kw=kw: p.ewm(**kw).mean(),
+        ))
+    for name, op, ref in cases:
+        want = ref(pnum)
+        got = op(edf).to_pandas().sort_index()
+        for c in pnum.columns:
+            assert same(got[c], want[c]), (name, "frame", c)
+            s = op(edf[c]).to_pandas().sort_index()
+            assert same(s[name], want[c]), (name, "series", c)
 
 
 def test_frame_fill_matches_pandas(spark, orders_pd):

@@ -517,6 +517,21 @@ def test_ewm_plans_scale_safe(spark):
     assert "Exchange SinglePartition" not in plan, plan
 
 
+def test_frame_ewm_engine_matches_series(spark):
+    """Frame and Series ewm share one global kernel and its engine
+    choice: a kernel wider than 8 lags (span=20 -> W=369) plans pandas'
+    C kernel per padded bucket (the grouped-pandas node), never the
+    window engine's O(W)-per-row higher-order folds."""
+    orders = es.read_parquet(spark, f"{SF}/orders.parquet", index_col="o_orderkey")
+    for out in (
+        orders[["o_custkey", "o_totalprice"]].ewm(span=20).mean().to_spark(),
+        orders["o_totalprice"].ewm(span=20).mean().to_spark(),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInPandas" in plan, plan
+        assert "Window" not in plan, plan
+
+
 def test_round2_operator_plan_shapes(spark):
     """Scale pins for the round's new operators: scaling is a
     zero-shuffle literal projection, corpus profiling is one hash
