@@ -16,6 +16,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._literals import array_lit
 from .frame import DataFrame
 from .schema import pd_to_spark_type
 
@@ -245,7 +246,7 @@ def write_zordered(
                 ladder.append(v)
         # bucket id = number of boundaries strictly below the value
         # (array HOF — compact codegen vs a 2^bits-branch CASE ladder)
-        arr = F.array(*[F.lit(float(v)) for v in ladder])
+        arr = array_lit([float(v) for v in ladder], "double")
         code = F.size(F.filter(arr, lambda b: F.col(c).cast("double") > b))
         codes.append(F.coalesce(code, F.lit(0)).cast("long"))
     # Morton interleave: shared core with operators/zorder (which also

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame as SparkDataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._literals import array_lit
 from .schema import Field, Schema, spark_to_pd_dtype
 from .series import Series
 
@@ -166,11 +167,22 @@ class DataFrame:
         """Physical projection: index cols + visible columns under display
         names (column pruning reaches the parquet scan via Catalyst)."""
         sdf = sdf if sdf is not None else self._sdf
-        cols = [F.col(c) for c in self._schema.index_cols if c not in self._schema.display_names]
-        cols += [
-            F.col(f.column_name).alias(f.display_name) for f in self._schema.fields
-        ]
+        fields = self._schema.fields
+        names = self._projected_names()
+        if all(f.column_name == f.display_name for f in fields) and sdf.columns == names:
+            # identity: rebuilding F.col(c).alias(c) per field costs
+            # ~4 py4j commands per column and changes nothing
+            return sdf
+        hidden_index = names[: len(names) - len(fields)]
+        cols = [F.col(c) for c in hidden_index]
+        cols += [F.col(f.column_name).alias(f.display_name) for f in fields]
         return sdf.select(*cols)
+
+    def _projected_names(self) -> list[str]:
+        """Column names of :meth:`_projected`'s output: index columns not
+        shadowed by a display name, then every display name."""
+        shown = self._schema.display_names
+        return [c for c in self._schema.index_cols if c not in shown] + shown
 
     # ------------------------------------------------------------------
     # column ops (reference eland/dataframe.py:329-468,1184-1272,2078-2151)
@@ -2355,7 +2367,7 @@ class DataFrame:
         ]
         # one array-percentile agg per field: a single value map per
         # column regardless of how many quantiles are requested
-        qarr = F.array(*[F.lit(float(qq)) for qq in qs])
+        qarr = array_lit([float(qq) for qq in qs], "double")
         exprs = [
             (
                 F.percentile_approx(F.col(f.column_name), [float(qq) for qq in qs])
@@ -3213,15 +3225,32 @@ class DataFrame:
     map = applymap
 
     def to_pandas(self, show_progress: bool = False, set_index: bool = False) -> pd.DataFrame:
-        sdf = self._projected(self._ordered_sdf())
-        pdf = sdf.toPandas()
-        icols = [c for c in self._schema.index_cols if c in pdf.columns]
+        names = self._projected_names()
+        icols = [c for c in self._schema.index_cols if c in names]
         by_name = {f.column_name: f.display_name for f in self._schema.fields}
         user = [
             (by_name.get(c, c), a, nl)
             for c, a, nl in (self._order or ())
-            if by_name.get(c, c) in pdf.columns
+            if by_name.get(c, c) in names
         ]
+        shown = {f.display_name: f.column_name for f in self._schema.fields}
+        # The driver sorts below whenever the whole index and every sort
+        # key come back, so a Spark global sort under it (a range-
+        # partition sampling job plus a shuffle) would sort the rows a
+        # second time — the reference sorts client-side too
+        # (SortIndexAction, eland/actions.py:52-91). A hidden sort key
+        # or no index keeps the Spark order.
+        resort = (
+            bool(self._schema.index_cols)
+            and all(shown.get(c, c) == c for c in self._schema.index_cols)
+            and len(user) == len(self._order or ())
+        )
+        sdf = self._projected(None if resort else self._ordered_sdf())
+        pdf = sdf.toPandas()
+        if resort and user:
+            # index first: the stable key sort below keeps it as the
+            # tiebreak, like the Spark order's index suffix
+            pdf = pdf.sort_values(icols, kind="mergesort")
         if user and len(user) == len(self._order):
             # explicit sort_values ordering: present it (pandas
             # semantics), stable with nulls where the sort put them

@@ -26,6 +26,8 @@ import math
 from pyspark.sql import DataFrame as SparkDataFrame
 from pyspark.sql import functions as F
 
+from .._literals import array_lit
+
 __all__ = [
     "hashed_features",
     "train_linear_classifier",
@@ -112,22 +114,17 @@ def train_linear_classifier(
     # one job wave saved per training call
     n: "int | None" = None
     w: dict[int, float] = {}
-    spark = sdf.sparkSession
     for _ in range(iters):
         if w:
-            # weights as a broadcast table (model-sized), not a map
-            # literal — thousands of nonzero buckets stay off the plan
-            wdf = spark.createDataFrame(
-                [(b, float(v)) for b, v in w.items()], "bucket int, w double"
-            )
-            scores = (
-                feats.join(F.broadcast(wdf), "bucket", "left")
-                .groupBy("id")
-                .agg(
-                    F.sum(
-                        F.coalesce(F.col("w"), F.lit(0.0)) * F.col("x")
-                    ).alias("s")
-                )
+            # weights as ONE dense array literal looked up by bucket
+            # (intercept in slot 1, bucket b in slot b + 2): no join,
+            # and the build cost does not grow with n_buckets
+            dense = [w.get(b, 0.0) for b in range(-1, n_buckets)]
+            warr = array_lit(dense, "double")
+            scores = feats.groupBy("id").agg(
+                F.sum(
+                    F.element_at(warr, F.col("bucket") + 2) * F.col("x")
+                ).alias("s")
             )
             resid = labels.join(scores, "id", "left").select(
                 "id",
@@ -175,12 +172,13 @@ def score_hashed_classifier(
     weights of the text's tokens) — the inference twin of
     :func:`train_linear_classifier`, a zero-shuffle scan predicate
     like text.linear_classifier_score (weights ship as ONE array
-    literal; at 2^12 buckets that is a ~32 KB broadcast)."""
+    literal built by a constant number of gateway commands; at 2^12
+    buckets the plan carries ~32 KB of doubles)."""
     from .dedup import normalized_tokens
 
     n_buckets = len(weights)
     toks = normalized_tokens(text)
-    warr = F.lit([float(x) for x in weights])
+    warr = array_lit([float(x) for x in weights], "double")
     s = F.aggregate(
         toks,
         F.lit(0.0),

@@ -91,9 +91,19 @@ def connected_components(
     large graphs take automatically because their edge count stays
     over the bound through the geometric shrink.
     """
-    e0 = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
-        F.col("u").isNotNull() & F.col("v").isNotNull()
-    )
+    e0 = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    tu, tv = (f.dataType for f in e0.schema.fields)
+    if tu != tv:
+        # node and component values come from both sides: widen both to
+        # the type unionByName gives `nodes` below, so the driver fold's
+        # local frame and the distributed path share one schema
+        common = e0.select("u").unionByName(
+            e0.select(F.col("v").alias("u"))
+        ).schema[0].dataType
+        e0 = e0.select(
+            F.col("u").cast(common).alias("u"), F.col("v").cast(common).alias("v")
+        )
+    e0 = e0.filter(F.col("u").isNotNull() & F.col("v").isNotNull())
     # one materialization of the (expensive) pair pipeline serves the
     # bound probe, the node set, and round 1's two edge references —
     # without it, `nodes` re-executed the whole pipeline at action time

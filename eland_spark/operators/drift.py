@@ -24,6 +24,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .._literals import map_lit
+
 __all__ = [
     "drift_bins",
     "psi",
@@ -733,10 +735,7 @@ def fdr_bh(
         for pv, cand in reversed(cands):
             suffix = min(suffix, cand)
             adj_map[pv] = suffix
-        lookup = F.create_map(
-            *[F.lit(v) for kv in adj_map.items() for v in kv]
-        )
-        adj_col = lookup[F.col("__p__")]
+        adj_col = map_lit(adj_map, "double", "double")[F.col("__p__")]
     else:
         m = per.agg(F.coalesce(F.sum("__n__"), F.lit(0))).collect()[0][0]
         # max rank j of each distinct p's tied block -> the block's

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .._literals import array_lit
+
 __all__ = ["funnel", "funnel_chains", "cohort_retention"]
 
 
@@ -55,7 +57,7 @@ def _fold_chains(
     if not steps:
         raise ValueError("funnel needs at least one step")
     k = len(steps)
-    steps_lit = F.array(*[F.lit(s) for s in steps])
+    steps_lit = array_lit(steps, "string")
 
     ev = events.select(
         F.col(user_col).alias("__u__"),
@@ -78,7 +80,7 @@ def _fold_chains(
         F.sort_array(F.collect_list(item)).alias("__evs__")
     )
 
-    init = F.array(*[F.lit(None).cast("long") for _ in range(k)])
+    init = array_lit([None] * k, "bigint")
 
     def step_fold(acc, x):
         # n = how many steps already matched (prefix of non-nulls)
@@ -196,7 +198,7 @@ def funnel_chains(
     ``funnel_with_state`` operator. ``skew_safe=True`` swaps the fold
     for the bounded-state k-chained-min-agg plan (identical chains;
     distinct step types required — see :func:`_chained_min_chains`)."""
-    steps_lit = F.array(*[F.lit(s) for s in steps])
+    steps_lit = array_lit(steps, "string")
     builder = _chained_min_chains if skew_safe else _fold_chains
     chains = builder(events, steps, user_col, type_col, ts_col,
                      within_seconds)

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .._literals import map_lit
+
 __all__ = ["exact_percentiles", "weighted_quantiles"]
 
 
@@ -68,9 +70,7 @@ def exact_percentiles(
             pos.append((x, lo, hi))
             want.update((lo, hi))
 
-        off_map = F.create_map(
-            *[F.lit(v) for kv in offsets.items() for v in kv]
-        )
+        off_map = map_lit(offsets, "bigint", "bigint")
         ranked = vals.withColumn(
             "__rank__",
             off_map[F.shiftright(F.col("__mid__"), 33)]

@@ -46,6 +46,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .._literals import map_lit
+
 __all__ = [
     "with_global_rank",
     "with_global_shift",
@@ -114,10 +116,7 @@ def _rank_pass(
         acc += bucket_counts[b]
     pos = F.col("__mid__").bitwiseAND(F.lit(_POS_MASK))
     if offsets:
-        off_map = F.create_map(
-            *[F.lit(v) for kv in offsets.items() for v in kv]
-        )
-        rank = off_map[pid] + pos + 1
+        rank = map_lit(offsets, "bigint", "bigint")[pid] + pos + 1
     else:  # empty frame: no offsets to look up (no rows to rank)
         rank = pos + 1
     return src, pid, stats, offsets, acc, rank.cast("long")
@@ -259,6 +258,13 @@ def _global_runs(
         partitions,
     )
     w = _running(bucket)
+    # each carry map literal is typed as its task's aggregate
+    types = [
+        f.dataType.simpleString()
+        for f in sdf.select(
+            *[_RUN_FNS[k](e) for e, k in tasks.values()]
+        ).schema.fields
+    ]
     runs: dict[str, Column] = {}
     for i, (key, (e, kind)) in enumerate(tasks.items()):
         within = _RUN_FNS[kind](e).over(w)
@@ -290,9 +296,7 @@ def _global_runs(
         if not offsets:  # empty frame / all-null column / single bucket
             runs[key] = within
             continue
-        carry = F.create_map(
-            *[F.lit(v) for kv in offsets.items() for v in kv]
-        )[bucket]
+        carry = map_lit(offsets, "bigint", types[i])[bucket]
         if additive:
             # within is NULL when the bucket prefix holds no
             # observations — the carry must still flow through
@@ -468,21 +472,14 @@ def _global_cummoments(
     # GetMapValue scan per row instead of the seven per-moment map
     # lookups this used to pay (each scans every bucket key per row).
     if offsets:
-        entries = []
-        for b, vals in offsets.items():
-            mm = minmax[b]
-            entries.append(F.lit(b))
-            entries.append(
-                F.array(
-                    *[
-                        F.lit(None).cast("double")
-                        if x is None
-                        else F.lit(float(x))
-                        for x in (*vals, mm[0], mm[1])
-                    ]
-                )
-            )
-        carry = F.create_map(*entries)[bucket]
+        carry = map_lit(
+            {
+                b: [None if x is None else float(x) for x in (*vals, *minmax[b])]
+                for b, vals in offsets.items()
+            },
+            "bigint",
+            "array<double>",
+        )[bucket]
     else:  # empty frame / all-null column / single bucket
         carry = F.array(
             *([F.lit(0.0)] * 5),
@@ -979,10 +976,8 @@ def with_global_fill(
             if t is not None:
                 acc = t
         if carries:
-            carry_map = F.create_map(
-                *[F.lit(v) for kv in carries.items() for v in kv]
-            )
-            run = F.coalesce(within, carry_map[bucket])
+            vtype = sdf.schema[c].dataType.simpleString()
+            run = F.coalesce(within, map_lit(carries, "bigint", vtype)[bucket])
         else:
             run = within
         out = out.withColumn(c, run)
@@ -1258,19 +1253,17 @@ def keyed_midranks(
         koff[k] = acc
         acc += key_tot[k]
 
-    def _map(d, col):
+    def _map(d, col, key_type):
         if not d:
             return F.lit(0)
-        return F.coalesce(
-            F.create_map(*[F.lit(v) for kv in d.items() for v in kv])[col],
-            F.lit(0),
-        )
+        return F.coalesce(map_lit(d, key_type, "bigint")[col], F.lit(0))
 
-    run = _map(boff, bucket) + F.coalesce(
+    run = _map(boff, bucket, "bigint") + F.coalesce(
         F.sum(F.col(weight_col)).over(w), F.lit(0)
     )
     n = F.col(weight_col)
-    mid = (run - _map(koff, F.col(key_col)) - n) + (n + 1) / 2.0
+    key_type = per.schema[key_col].dataType.simpleString()
+    mid = (run - _map(koff, F.col(key_col), key_type) - n) + (n + 1) / 2.0
     out = ranked.select(key_col, val_col, mid.alias(out_col))
     return out, key_tot
 

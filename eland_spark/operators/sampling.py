@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .._literals import map_lit
+
 __all__ = ["stratified_sample", "mix_datasets", "sample_exact_n"]
 
 
@@ -344,7 +346,9 @@ def sample_by_temperature(
         rates = {k: min(1.0, r) for k, r in rates.items()}
     if not rates:
         return sdf.filter(F.lit(False))
-    rate_map = F.create_map(*[F.lit(v) for kv in rates.items() for v in kv])
+    rate_map = map_lit(
+        rates, sdf.schema[source_col].dataType.simpleString(), "double"
+    )
     # md5 key is uniform on [0, 16^15); compare against rate * 16^15
     key = _md5_rank_key(F.col(id_col), seed).cast("double")
     r = rate_map[F.col(source_col)]

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame as SparkDataFrame
 from pyspark.sql import functions as F
 
+from .._literals import array_lit
+
 
 def standard_scale(
     sdf: SparkDataFrame, cols: list[str], ddof: int = 1, suffix: str = "_z"
@@ -206,7 +208,7 @@ def quantile_normalize(
         F.col("__rv__").isNotNull() & ~F.isnan("__rv__")
     )
     landmarks = exact_percentiles(ref_vals, "__rv__", qs)
-    arr = F.array(*[F.lit(float(x)) for x in landmarks])
+    arr = array_lit([float(x) for x in landmarks], "double")
     ranked = rank_transform(sdf, col, suffix="__u__")
     u = F.col(f"{col}__u__")
     pos = u * (n_quantiles - 1)

@@ -24,6 +24,8 @@ from typing import TYPE_CHECKING, Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .._literals import array_lit
+
 if TYPE_CHECKING:
     from ..frame import DataFrame
 
@@ -45,7 +47,7 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def _vec_lit(vec: Sequence[float]) -> Column:
-    return F.array(*[F.lit(float(v)) for v in vec])
+    return array_lit([float(v) for v in vec], "double")
 
 
 def cosine_topk(
@@ -351,10 +353,11 @@ def nearest_cell(vec: Column, centroids: list[list[float]]) -> Column:
     via one transform, index via array_position of the min. Stays
     COMPACT as k grows (the old chained-when form exploded to
     k * dim terms, capping practical cell counts)."""
-    # ONE nested-array literal (a single py4j call) — per-element
-    # F.lit() costs ~1ms of driver round-trip each, which at k*dim in
-    # the thousands dominated plan CONSTRUCTION time
-    carr = F.lit([[float(x) for x in c] for c in centroids])
+    # ONE nested-array literal built in a constant number of py4j
+    # commands — F.lit(list) expands to one lit() per element (~1ms of
+    # driver round trips each), which at k*dim in the thousands
+    # dominated plan CONSTRUCTION time
+    carr = array_lit([[float(x) for x in c] for c in centroids], "array<double>")
     dists = F.transform(
         carr,
         lambda c: F.aggregate(
@@ -981,7 +984,7 @@ def cluster_metrics(
     both rounded 6dp), ordered by cell."""
     if len(centroids) < 2:
         raise ValueError("cluster_metrics: need >= 2 centroids for silhouette")
-    carr = F.lit([[float(x) for x in c] for c in centroids])
+    carr = array_lit([[float(x) for x in c] for c in centroids], "array<double>")
     v = F.col(vec_col)
     dists = F.transform(
         carr,

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .._literals import array_lit, map_lit
+
 # Per-language stopword marker sets for the n-gram/stopword language-ID
 # heuristic. Tiny on purpose: broadcastable as literals inside the plan.
 LANG_MARKERS: dict[str, list[str]] = {
@@ -111,7 +113,7 @@ def lang_id(text: Column) -> Column:
         ]
     )
     m = F.array_max(entries)
-    langs = F.array(*[F.lit(lang) for lang, _ in pairs])
+    langs = array_lit([lang for lang, _ in pairs], "string")
     return F.when(
         m["s"] > 0, F.element_at(langs, -m["j"] + 1)
     ).otherwise(F.lit("unknown"))
@@ -196,12 +198,8 @@ def unigram_logppl(
         F.sum(F.size(normalized_tokens(text))).alias("n")
     ).collect()[0]["n"] or 0
     if vocab_rows:
-        lm = F.create_map(
-            *[
-                F.lit(v)
-                for r in vocab_rows
-                for v in (r["token"], float(r["count"]))
-            ]
+        lm = map_lit(
+            {r["token"]: float(r["count"]) for r in vocab_rows}, "string", "double"
         )
         lookup = lm.__getitem__
     else:
@@ -531,9 +529,7 @@ def linear_classifier_score(
     averaging."""
     if not weights:
         raise ValueError("weights must be a non-empty dict")
-    wmap = F.create_map(
-        *[F.lit(v) for kv in sorted(weights.items()) for v in kv]
-    )
+    wmap = map_lit(dict(sorted(weights.items())), "string", "double")
     toks = F.filter(
         F.split(F.lower(F.trim(text)), r"\s+"), lambda t: t != ""
     )
@@ -770,7 +766,7 @@ def add_gopher_columns(
     sw_hits = F.size(
         F.array_intersect(
             F.array_distinct(F.transform(toks, F.lower)),
-            F.array(*[F.lit(w) for w in GOPHER_STOPWORDS]),
+            array_lit(GOPHER_STOPWORDS, "string"),
         )
     ).cast("long")
 
@@ -892,7 +888,7 @@ def add_c4_columns(
         F.filter(F.split(F.lower(clean), r"\s+"), lambda w: w != "")
     )
     has_bad = (
-        F.arrays_overlap(toks, F.array(*[F.lit(w) for w in bad]))
+        F.arrays_overlap(toks, array_lit(bad, "string"))
         if bad
         else F.lit(False)
     )

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .._literals import array_lit
+
 
 def time_bucket(ts: Column, step_seconds: int) -> Column:
     """Epoch-aligned fixed-width bucket (left edge) of a timestamp —
@@ -377,7 +379,7 @@ def acf(
         rank_col="__g__",
         partitions=partitions,
     ).select("__g__", "__v__")
-    lags = F.array(*[F.lit(k) for k in range(1, nlags + 1)])
+    lags = array_lit(range(1, nlags + 1), "int")
     src = ranked.select(
         F.col("__v__").alias("__prev__"),
         F.explode(lags).alias("lag"),

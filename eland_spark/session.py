@@ -29,6 +29,20 @@ def get_session(
     (partition coalescing + skew-join splitting), broadcast threshold
     governs dim-table joins, and Arrow keeps any unavoidable Python
     boundary vectorized.
+
+    PySpark's DataFrame call-site capture
+    (``spark.python.sql.dataFrameDebugging.enabled``) is off by default
+    here. With it on, every ``functions.*``, ``Column`` and
+    ``DataFrame`` method pays about ten extra py4j commands to record
+    its Python call site (``F.col`` 13 commands instead of 3), and for
+    calls made through the engine the recorded frame is an
+    ``eland_spark`` line, not the user's. Error classes are unchanged;
+    errors only lose the "== DataFrame ==" call-site context. Re-enable
+    it with
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+    "true"}``; PySpark reads the setting once per process (on the first
+    wrapped call with an active session) and caches it, so it must be
+    set on the first session the process builds.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -43,6 +57,7 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master is not None:
         builder = builder.master(master)

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .._literals import array_lit
 from ..operators.dedup import shingles
 from ..operators.text import quality_score
 
@@ -66,7 +67,7 @@ def stream_contamination_flags(
             f"benchmark has more than {max_shingles} distinct shingles; "
             "raise max_shingles or pre-hash the benchmark"
         )
-    bench_lit = F.array(*[F.lit(r["s"]) for r in bench_rows]) if bench_rows else None
+    bench_lit = array_lit([r["s"] for r in bench_rows], "string") if bench_rows else None
     if bench_lit is None:
         flag = F.lit(False)
     else:

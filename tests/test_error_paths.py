@@ -114,3 +114,15 @@ def test_crosstab_cardinality_guard(spark):
     )
     with pytest.raises(ValueError, match="distinct values"):
         li.crosstab("l_returnflag", "l_extendedprice")
+
+
+def test_ansi_divide_by_zero_keeps_its_error_class(orders):
+    """The session turns PySpark's call-site capture off; an ANSI
+    runtime error built through the frame API still raises PySpark's
+    ArithmeticException with the DIVIDE_BY_ZERO error class."""
+    from pyspark.errors.exceptions.captured import ArithmeticException
+
+    bad = orders.eval("r = o_totalprice / (o_custkey - o_custkey)")
+    with pytest.raises(ArithmeticException, match=r"\[DIVIDE_BY_ZERO\]") as err:
+        bad.to_pandas()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"

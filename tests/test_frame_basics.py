@@ -985,3 +985,33 @@ def test_describe_include_all(orders, orders_pd):
         abs(got.loc["mean", "o_totalprice"] - exp.loc["mean", "o_totalprice"]) < 1e-6
     )
     assert pd.isna(got.loc["unique", "o_totalprice"])
+
+
+@pytest.mark.parametrize("na_position", ["last", "first"])
+def test_to_pandas_row_order_matches_pandas(spark, na_position):
+    """Rows come back in pandas order without a Spark global sort:
+    plain index order, and sort_values with ties and nulls (ties fall
+    back to index order, like a stable pandas sort of an index-sorted
+    frame)."""
+    import eland_spark as es
+
+    rng = np.random.RandomState(3)
+    n = 400
+    rows = [
+        (int(k), None if rng.rand() < 0.2 else int(rng.randint(0, 5)),
+         [None, "x", "y"][rng.randint(0, 3)], float(rng.rand()))
+        for k in rng.permutation(n)
+    ]
+    sdf = spark.createDataFrame(rows, "k long, a long, b string, v double")
+    frame = es.DataFrame(sdf.repartition(4), index_cols=("k",))
+    ref = (pd.DataFrame(rows, columns=["k", "a", "b", "v"])
+           .sort_values("k").reset_index(drop=True))
+
+    got = frame.to_pandas()
+    pdt.assert_frame_equal(got, ref, check_dtype=False)
+
+    for by, asc in ((["a"], True), (["a", "b"], [False, True]), (["b"], False)):
+        want = ref.sort_values(by, ascending=asc, na_position=na_position,
+                               kind="mergesort").reset_index(drop=True)
+        got = frame.sort_values(by, ascending=asc, na_position=na_position).to_pandas()
+        pdt.assert_frame_equal(got, want, check_dtype=False)

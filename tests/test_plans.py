@@ -1143,3 +1143,33 @@ def test_round5_query_plan_pins(spark):
         ._jdf.queryExecution().executedPlan().toString()
         .count("ArrowEvalPython")
     ) == 1
+
+
+def _collected_plan(monkeypatch, frame) -> tuple[str, "object"]:
+    """``frame.to_pandas()`` plus the executed plan of the Spark frame
+    it collected."""
+    seen = []
+    cls = type(frame._sdf)
+    collect = cls.toPandas
+
+    def recording(self):
+        seen.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(cls, "toPandas", recording)
+    pdf = frame.to_pandas()
+    return seen[0]._jdf.queryExecution().executedPlan().toString(), pdf
+
+
+def test_to_pandas_skips_spark_sort_when_driver_resorts(spark, li, monkeypatch):
+    """The driver re-sorts by the index (and any sort_values keys) on
+    the way out, so an unlimited frame is collected without a Spark
+    global sort: no range-partition sampling job, no shuffle."""
+    filtered = li[li.l_quantity > 40.0]
+    plan, pdf = _collected_plan(monkeypatch, filtered)
+    assert "rangepartitioning" not in plan, plan
+    key = list(li.index_cols)
+    assert pdf[key].equals(pdf[key].sort_values(key).reset_index(drop=True))
+    # head() keeps its order below the limit
+    plan, _ = _collected_plan(monkeypatch, li.sort_values("l_quantity").head(3))
+    assert "TakeOrderedAndProject" in plan, plan

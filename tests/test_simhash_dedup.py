@@ -520,3 +520,20 @@ def test_leakage_safe_split_keeps_clusters_together(spark):
     assert pdf.sort_values("doc_id").reset_index(drop=True).equals(
         again.sort_values("doc_id").reset_index(drop=True)
     )
+
+
+def test_connected_components_mixed_int_widths_share_one_schema(spark):
+    """Pairs typed ``id_a int, id_b bigint``: the round-0 driver fold and
+    the distributed path both return ``(node bigint, component
+    bigint)`` with the same rows, small ids or ids past 2^31."""
+    from eland_spark.operators.dedup import connected_components
+
+    for big in (9, 5_000_000_000):
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (4, big), (6, 6)], "id_a int, id_b bigint"
+        )
+        fold = connected_components(pairs)
+        dist = connected_components(pairs, driver_fold_max_edges=0)
+        assert fold.schema.simpleString() == dist.schema.simpleString()
+        assert fold.schema.simpleString() == "struct<node:bigint,component:bigint>"
+        assert sorted(fold.collect()) == sorted(dist.collect())
