@@ -3,18 +3,28 @@
 ``pandas_to_spark`` mirrors ``pandas_to_eland`` (eland/etl.py:40-232):
 existence policy fail/replace/append with schema-compat verification
 (eland/field_mappings.py:892-931), pandas index frozen as the engine
-index column. Bulk parallelism is Spark-native (cluster-parallel parquet
-write replaces the reference's 4-thread parallel_bulk).
+index column(s). Where the reference streams chunked bulk requests, the
+frame is converted to Arrow on the driver and written straight into the
+target directory as parquet part files, then read back under the schema
+it was written with: an ingest fires no Spark job and never ships rows
+inside task binaries.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import uuid
+from urllib.parse import urlsplit
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ._literals import array_lit
 from .frame import DataFrame
@@ -45,7 +55,6 @@ _COMPATIBLE = {
     ("bigint", "int"),
     ("float", "double"),
     ("double", "float"),
-    ("date", "timestamp"),
 }
 
 
@@ -348,6 +357,51 @@ def _verify_compat(existing: T.StructType, incoming: T.StructType) -> None:
         )
 
 
+def _arrow_column(s: pd.Series, dt: T.DataType, tz: str) -> pa.Array:
+    """One pandas column as the Arrow array of Spark type ``dt``, with
+    the values ``spark.createDataFrame(pdf, schema)`` would hold:
+    naive timestamps are wall times in the session zone ``tz``,
+    sub-microsecond values floor to the microsecond (pre-1970 too),
+    out-of-range integers raise, and a string column stringifies
+    whatever objects it holds."""
+    if isinstance(s.dtype, pd.CategoricalDtype):
+        cats = s.dtype.categories.dtype
+        # integer and bool categories cannot hold the missing values
+        s = s.astype(object if cats.kind in "iub" and s.hasnans else cats)
+    is_ts = pd.api.types.is_datetime64_any_dtype(s.dtype)
+    if is_ts and isinstance(dt, T.TimestampType):
+        if s.dt.tz is None:
+            s = s.dt.tz_localize(tz, ambiguous=False)
+        s = s.dt.tz_convert("UTC")
+    if is_ts and s.dt.unit == "ns":
+        s = s.dt.floor("us")
+    mask = None if hasattr(s.array, "__arrow_array__") else s.isna()
+    try:
+        return pa.Array.from_pandas(s, mask=mask, type=to_arrow_type(dt), safe=True)
+    except (pa.ArrowException, TypeError, ValueError) as e:
+        if isinstance(dt, T.StringType):
+            vals = s.dt.to_pytimedelta() if pd.api.types.is_timedelta64_dtype(s.dtype) else s
+            return pa.array(
+                [None if m else str(v) for v, m in zip(vals, s.isna())], pa.string()
+            )
+        raise ValueError(
+            f"pandas_to_spark: column {s.name!r} ({s.dtype}) does not fit "
+            f"Spark type {dt.simpleString()}: {e}"
+        ) from None
+
+
+def _local_path(path: str) -> str:
+    scheme = urlsplit(path).scheme
+    if scheme == "file":
+        return urlsplit(path).path
+    if len(scheme) > 1:
+        raise ValueError(
+            f"pandas_to_spark writes to the local filesystem only; "
+            f"{path!r} has scheme {scheme!r}"
+        )
+    return path
+
+
 def pandas_to_spark(
     pd_df: pd.DataFrame,
     spark: SparkSession,
@@ -359,34 +413,111 @@ def pandas_to_spark(
 ) -> DataFrame:
     """pandas_to_eland analog (reference eland/etl.py:40-232): infer Spark
     schema from dtypes (+overrides), honor fail/replace/append, freeze the
-    pandas index as the ``_id`` column, return a fresh lazy frame."""
-    pdf = pd_df.copy()
-    if dropna:
-        pdf = pdf.dropna()
-    index_name = None
-    if use_pandas_index_for_id:
-        index_name = pdf.index.name or "_id"
-        pdf = pdf.reset_index().rename(columns={pdf.index.name or "index": index_name})
-    fields = []
-    for col in pdf.columns:
-        stype = (type_overrides or {}).get(col) or pd_to_spark_type(pdf[col].dtype)
-        fields.append(T.StructField(col, stype, True))
-    schema = T.StructType(fields)
-    sdf = spark.createDataFrame(pdf, schema=schema)
+    pandas index as the index column(s), return a fresh lazy frame.
 
-    exists = os.path.exists(path)
+    - ``path`` is a local directory (a bare path or a ``file:`` URI;
+      any other scheme raises ``ValueError``).
+    - The frame converts to Arrow on the driver under the Spark schema
+      that ``pd_to_spark_type`` and ``type_overrides`` decide, typed by
+      PySpark's own Spark -> Arrow map (``to_arrow_type``): boolean,
+      tinyint/smallint/int/bigint, float/double, decimal(p, s), string,
+      binary, date32, ``timestamp_ntz`` as naive microseconds and
+      ``timestamp`` as UTC-adjusted microseconds, which is how Spark's
+      parquet reader tells the two apart. Naive
+      values bound for ``timestamp`` are wall times in
+      ``spark.sql.session.timeZone``; tz-aware ones keep their instant;
+      sub-microsecond values floor to the microsecond. The values match
+      ``spark.createDataFrame(pdf, schema)``, except that a missing
+      value is null in every column (``createDataFrame`` writes a
+      missing timedelta as the string ``'NaT'`` and rejects a missing
+      integer category).
+    - The rows split into ``sparkContext.defaultParallelism`` parquet
+      files (fewer for short frames), so a scan of the result runs as
+      many tasks as one of ``createDataFrame``'s output.
+    - ``replace`` (or a new path) writes into a hidden sibling temp dir
+      and swaps it in, so a write that fails midway leaves the old
+      table as it was. ``append`` checks ``_verify_compat`` against the
+      existing table first, then moves uniquely named part files in; a
+      widened column (int + bigint, float + double) reads back as the
+      wider type. ``fail`` raises ``ValueError`` on an existing path.
+    - The result reads back with the known schema: no Spark job runs
+      on ``replace``, not even a schema inference (``append`` reads
+      the existing table's schema first).
+    - A MultiIndex becomes one index column per level (unnamed levels
+      are ``level_<i>``, as ``reset_index`` names them); an unnamed
+      flat index becomes ``_id``.
+    """
+    local = os.path.abspath(_local_path(path))
+    pdf = pd_df.dropna() if dropna else pd_df
+    index_cols: tuple[str, ...] = ()
+    if use_pandas_index_for_id:
+        if isinstance(pdf.index, pd.MultiIndex):
+            levels = pdf.index.nlevels
+            pdf = pdf.reset_index()
+            index_cols = tuple(pdf.columns[:levels])
+        else:
+            name = pdf.index.name or "_id"
+            pdf = pdf.reset_index().rename(columns={pdf.index.name or "index": name})
+            index_cols = (name,)
+    overrides = type_overrides or {}
+    schema = T.StructType([
+        T.StructField(c, overrides.get(c) or pd_to_spark_type(pdf[c].dtype), True)
+        for c in pdf.columns
+    ])
+
+    exists = os.path.exists(local)
     if exists and if_exists == "fail":
         raise ValueError(
             f"Could not create table {path!r} because it already exists. "
             "Change the if_exists parameter to 'append' or 'replace'."
         )
-    if exists and if_exists == "append":
-        existing = spark.read.parquet(path).schema
+    append = exists and if_exists == "append"
+    read_schema = schema
+    if append:
+        existing = spark.read.parquet(local).schema
         _verify_compat(existing, schema)
-        sdf.write.mode("append").parquet(path)
-    else:
-        sdf.write.mode("overwrite").parquet(path)
-    return read_parquet(spark, path, index_col=index_name)
+        wide = {
+            f.name: f.dataType for f in schema
+            if f.dataType.simpleString() in ("bigint", "double")
+        }
+        read_schema = T.StructType(
+            [T.StructField(f.name, wide.get(f.name, f.dataType), True) for f in existing]
+        )
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    table = pa.Table.from_arrays(
+        [_arrow_column(pdf[f.name], f.dataType, tz) for f in schema], names=schema.names
+    )
+    n_files = max(1, min(spark.sparkContext.defaultParallelism, table.num_rows))
+    parent = os.path.dirname(local)
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=f".{os.path.basename(local)}.", dir=parent)
+    try:
+        tag = uuid.uuid4().hex
+        bounds = [table.num_rows * i // n_files for i in range(n_files + 1)]
+        for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+            pq.write_table(
+                table.slice(lo, hi - lo),
+                os.path.join(tmp, f"part-{i:05d}-{tag}.snappy.parquet"),
+                compression="snappy",
+            )
+        if append:
+            for f in os.listdir(tmp):
+                os.replace(os.path.join(tmp, f), os.path.join(local, f))
+        else:
+            if exists:
+                old = tmp + ".old"
+                os.rename(local, old)
+                os.rename(tmp, local)
+                if os.path.isdir(old):
+                    shutil.rmtree(old)
+                else:
+                    os.remove(old)
+            else:
+                os.rename(tmp, local)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return DataFrame(spark.read.schema(read_schema).parquet(local), index_cols=index_cols)
 
 
 def spark_to_pandas(df: DataFrame, show_progress: bool = False) -> pd.DataFrame:

@@ -872,11 +872,16 @@ class DataFrame:
 
     def sort_index(self, ascending: bool = True) -> "DataFrame":
         """Rows ordered by the index columns (pandas parity; one range
-        exchange, same plan as ``sort_values`` on the index). Clears
-        any explicit sort_values ordering."""
+        exchange, same plan as ``sort_values`` on the index). Replaces
+        any explicit sort_values ordering; a descending sort records
+        its keys so head/tail/to_pandas follow it."""
+        order = None
+        if not ascending:
+            cols = self._schema.index_cols or tuple(f.column_name for f in self._schema.fields)
+            order = tuple((c, False, True) for c in cols)
         return self._with(
             sdf=self._sdf.orderBy(*self._index_order(desc=not ascending)),
-            order=None,
+            order=order,
         )
 
     def set_index(self, keys, drop: bool = True) -> "DataFrame":
@@ -2047,7 +2052,8 @@ class DataFrame:
         # index tie-break keeps the result deterministic (pandas
         # keep='first' on a frame ordered by the index)
         order += [F.col(c).asc() for c in self._schema.index_cols]
-        return self._with(sdf=self._sdf.orderBy(*order).limit(int(n)))
+        spec = tuple((self._schema.resolve(c), asc, True) for c in cols)
+        return self._with(sdf=self._sdf.orderBy(*order).limit(int(n)), order=spec)
 
     # ------------------------------------------------------------------
     # aggregations (reference eland/operations.py:148-758)

@@ -31,10 +31,6 @@ class Index:
         return cols[0] if cols else None
 
     @property
-    def sort_field(self) -> str | None:
-        return self.es_index_field
-
-    @property
     def is_source_field(self) -> bool:
         # always a real column here (the reference's synthetic _id has no
         # Spark analog; identity is frozen at source, SURVEY §1.4)

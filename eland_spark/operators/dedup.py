@@ -803,25 +803,6 @@ def _minhash_agg_exprs(num_hashes: int, seed: int):
     return _MINHASH_AGG_CACHE[key]
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """Array-lambda MinHash signature (small-data path; see
-    ``minhash_signatures`` for the codegen'd row-based variant)."""
-    params = minhash_params(num_hashes)
-    base = F.transform(
-        shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_PRIME))
-    )
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    base, lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(MINHASH_PRIME))
-                )
-            )
-            for a, b in params
-        ]
-    )
-
-
 def lsh_band_keys(sig: Column, bands: int = 16, rows_per_band: int = 4) -> Column:
     """Split the signature into bands; each band hashes to one bucket key.
     Rows sharing any band key are candidate pairs. array<bigint> length bands."""
@@ -831,38 +812,6 @@ def lsh_band_keys(sig: Column, bands: int = 16, rows_per_band: int = 4) -> Colum
             F.concat_ws("_", b, F.concat_ws(",", F.slice(sig, b * rows_per_band + 1, rows_per_band)))
         ),
     )
-
-
-def minhash_dedup(
-    df: "DataFrame",
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.8,
-):
-    """MinHash+LSH near-dup removal. Returns the frame with near-dup rows
-    removed (keeping the lowest id per duplicate cluster).
-
-    Scale path: candidate generation is an explode on band keys followed
-    by a self-join on the bucket key — the join fan-out is bounded by
-    bucket sizes, never |rows|^2. Estimated Jaccard from signature
-    agreement verifies candidates before linking.
-    """
-    from ..frame import DataFrame as EDF
-
-    pairs = minhash_candidate_pairs(
-        df, text_col, id_col, k=k, num_hashes=num_hashes, bands=bands
-    ).filter(F.col("est_jaccard") >= threshold)
-    # one-hop cluster link: drop every row that has ANY smaller
-    # near-duplicate (full transitive closure would need iteration; one
-    # hop is the dedup contract)
-    schema = df._schema
-    idc = F.col(schema.resolve(id_col))
-    to_drop = pairs.select(F.col("id_b").alias("__drop__")).distinct()
-    kept = df._sdf.join(to_drop, on=idc == F.col("__drop__"), how="left_anti")
-    return EDF(kept, schema)
 
 
 def minhash_candidate_pairs(

@@ -11,7 +11,6 @@ at most ``bins`` distinct keys.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
 from ..frame import DataFrame
@@ -105,13 +104,3 @@ def hist_matrix(
             counts = np.asarray(row[f"n__{f.display_name}"], dtype="int64")
             out[f.display_name] = (edges, counts)
     return out
-
-
-def hist_frame(df: DataFrame, bins: int = 10) -> pd.DataFrame:
-    """All-numeric-column histogram matrix for plotting (reference
-    eland/plotting/_core.py:21-131). Two jobs total via hist_matrix."""
-    out = {}
-    for name, (edges, counts) in hist_matrix(df, bins).items():
-        out[f"{name}_edges"] = edges[:-1]
-        out[f"{name}_counts"] = counts
-    return pd.DataFrame(out)

@@ -475,14 +475,6 @@ def _encode_blocks(
     return dc_pred
 
 
-def _blocks_of(plane: np.ndarray) -> np.ndarray:
-    """Split an (8a, 8b) plane into a (a*b, 8, 8) stack, row-major."""
-    a, b = plane.shape[0] // 8, plane.shape[1] // 8
-    return (
-        plane.reshape(a, 8, b, 8).transpose(0, 2, 1, 3).reshape(a * b, 8, 8)
-    )
-
-
 def encode_jpeg_baseline(
     img: np.ndarray,
     subsample: str = "4:4:4",

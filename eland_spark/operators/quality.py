@@ -109,10 +109,6 @@ class Check:
         })
         return self
 
-    def is_non_negative(self, column: str) -> "Check":
-        return self.satisfies(f"{_bt(column)} >= 0",
-                              f"{column} >= 0")
-
     # -- constraints needing their own (still bounded) jobs --
 
     def is_unique(self, *columns: str, min_ratio: float = 1.0) -> "Check":

@@ -419,14 +419,6 @@ def assign_cells_vectorized(
     return src.mapInPandas(emit, schema=out_schema)
 
 
-def _l2sq(a: Column, c: list[float]) -> Column:
-    return F.aggregate(
-        F.zip_with(a, _vec_lit(c), lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def ivf_topk(
     df: "DataFrame",
     query_vec: Sequence[float],

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
 
-import numpy as np
+import pandas as pd
 from pyspark.sql import types as T
 
 __all__ = ["Field", "Schema", "spark_to_pd_dtype", "pd_to_spark_type"]
@@ -57,16 +57,21 @@ def spark_to_pd_dtype(dt: T.DataType) -> str:
 
 def pd_to_spark_type(dtype) -> T.DataType:
     """pandas/numpy dtype -> Spark type for ingest
-    (reference eland/field_mappings.py:478-515)."""
-    if isinstance(dtype, str) and dtype in ("object", "string", "str"):
-        return T.StringType()
-    dtype = np.dtype(dtype)
-    name = getattr(dtype, "name", str(dtype))
+    (reference eland/field_mappings.py:478-515). Extension dtypes map
+    like their numpy twins: nullable ``Int*``/``UInt*`` -> bigint,
+    ``boolean`` -> boolean, ``string`` -> string, tz-aware datetimes ->
+    timestamp, ``Categorical`` -> the type of its categories."""
+    dtype = pd.api.types.pandas_dtype(dtype)
+    if isinstance(dtype, pd.CategoricalDtype):
+        if dtype.categories is None:
+            raise ValueError("a 'category' dtype without categories has no Spark type")
+        return pd_to_spark_type(dtype.categories.dtype)
+    name = dtype.name.lower()
     if name.startswith("int") or name.startswith("uint"):
         return T.LongType()
     if name.startswith("float"):
         return T.DoubleType()
-    if name == "bool":
+    if name in ("bool", "boolean"):
         return T.BooleanType()
     if name.startswith("datetime"):
         return T.TimestampType()

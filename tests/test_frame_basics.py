@@ -1015,3 +1015,28 @@ def test_to_pandas_row_order_matches_pandas(spark, na_position):
                                kind="mergesort").reset_index(drop=True)
         got = frame.sort_values(by, ascending=asc, na_position=na_position).to_pandas()
         pdt.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_sort_index_descending_head_tail_to_pandas_match_pandas(orders, orders_pd):
+    """sort_index(ascending=False) records its keys: head/tail pick the
+    rows pandas picks, and to_pandas presents them descending."""
+    pdf = orders_pd.set_index("o_orderkey").sort_index(ascending=False)
+    desc = orders.sort_index(ascending=False)
+    assert list(desc.head(3).to_pandas()["o_orderkey"]) == list(pdf.head(3).index)
+    assert list(desc.tail(4).to_pandas()["o_orderkey"]) == list(pdf.tail(4).index)
+    assert list(desc.to_pandas()["o_orderkey"]) == list(pdf.index)
+
+
+def test_nlargest_nsmallest_keep_their_order(orders, orders_pd):
+    """nlargest/nsmallest record their sort keys, so the result comes
+    back in value order and a following head/tail slices that order."""
+    pdf = orders_pd.set_index("o_orderkey").sort_index()
+    for n, method in ((3, "nlargest"), (4, "nsmallest")):
+        got = getattr(orders, method)(n, "o_totalprice").to_pandas()
+        want = getattr(pdf, method)(n, "o_totalprice")
+        assert list(got["o_orderkey"]) == list(want.index), method
+    got = orders.nlargest(5, "o_totalprice").tail(2).to_pandas()
+    want = pdf.nlargest(5, "o_totalprice").tail(2)
+    assert list(got["o_orderkey"]) == list(want.index)
+    got = orders.nlargest(5, "o_totalprice").head(2).to_pandas()
+    assert list(got["o_orderkey"]) == list(pdf.nlargest(5, "o_totalprice").head(2).index)
