@@ -60,11 +60,18 @@ _COMPATIBLE = {
 
 def _nanos_ts_columns(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS) — Spark's vectorized
-    reader rejects them outright (PARQUET_TYPE_ILLEGAL)."""
+    reader rejects them outright (PARQUET_TYPE_ILLEGAL). A file is
+    read by its footer, a directory by its dataset schema (the first
+    data file's footer; ``_``/``.``-prefixed files are skipped)."""
     try:
-        import pyarrow.parquet as pq
+        if os.path.isdir(path):
+            import pyarrow.dataset as ds
 
-        schema = pq.read_schema(path)
+            schema = ds.dataset(path, format="parquet").schema
+        else:
+            import pyarrow.parquet as pq
+
+            schema = pq.read_schema(path)
         return [f.name for f in schema if str(f.type) == "timestamp[ns]"]
     except Exception:
         return []
@@ -82,7 +89,13 @@ def read_parquet(
     (eland/field_mappings.py:280-327): warn and keep the FIRST path's
     type, casting later paths to it; columns missing from a path
     surface as nulls. ``merge_schema=True`` instead uses Spark's
-    parquet schema merging (fails loudly on true conflicts)."""
+    parquet schema merging (fails loudly on true conflicts).
+
+    Parquet TIMESTAMP(NANOS) columns of the first path (a file or a
+    directory) come back as microsecond TIMESTAMP_NTZ. Reading them
+    sets ``spark.sql.legacy.parquet.nanosAsLong=true`` for the whole
+    session and leaves it set: the scan is lazy and reads the setting
+    when it runs, so restoring it on return would break the frame."""
     import warnings
 
     from pyspark.sql import functions as F

@@ -9,11 +9,17 @@ practice: empty-bin proportions clamp to ``eps`` so the logs stay
 finite, and the PSI reading is interpreted on the usual
 <0.1 stable / 0.1-0.25 moderate / >0.25 major scale.
 
-Scale shape: each snapshot reduces to bin-cardinality counts in ONE
-hash aggregation (map-side combinable), the two tiny count frames
-full-outer-join on the bin id, and the metric is a sum over bins —
-the raw tables stream through exactly once, nothing row-sized ever
-joins or collects.
+Scale shape: every test here, batch or streamed, reduces each snapshot
+to counts in ONE hash aggregation first — per bin (:func:`_bin_counts`)
+or per distinct value (:func:`_value_counts`) — and works on those
+count frames only: the raw tables stream through exactly once, nothing
+row-sized ever joins or collects. The binned tests full-join their bin
+frames null-safely with broadcast totals (:func:`_binned`); the rank
+tests full-join their value frames into one lazily checkpointed frame
+(:func:`_joined_counts`) that the windowless bucket prefix-sum pass
+(operators/ranking) and the scalar aggregate both read. Row-count
+denominators go through :func:`_nonzero`, so an empty side yields null
+statistics (DuckDB's ``x/0``), never an ANSI divide-by-zero error.
 """
 
 from __future__ import annotations
@@ -58,6 +64,143 @@ def _bin_expr(col, edges: Sequence[float]):
     return expr
 
 
+def _nonzero(name: str):
+    """A row-count denominator as double, null when the count is 0: a
+    fraction over an empty side is null (DuckDB's ``x/0``) instead of
+    Spark ANSI's DIVIDE_BY_ZERO."""
+    return F.when(F.col(name) > 0, F.col(name).cast("double"))
+
+
+def _bin_counts(
+    df: DataFrame, column: str, edges: "Sequence[float] | None", name: str
+) -> DataFrame:
+    """``(bin, name)`` counts of one snapshot: numeric bins of
+    :func:`_bin_expr` over explicit ``edges`` with nulls dropped, or
+    with ``edges=None`` one CATEGORICAL bin per distinct value (cast to
+    string), null being its own category."""
+    c = F.col(column)
+    if edges is not None:
+        key = _bin_expr(c.cast("double"), edges)
+        df = df.where(c.isNotNull())
+    else:
+        key = c.cast("string")
+    return df.groupBy(key.alias("bin")).agg(F.count(F.lit(1)).alias(name))
+
+
+def _binned(
+    ref: DataFrame, cur: DataFrame, column: str,
+    edges: "Sequence[float] | None",
+) -> DataFrame:
+    """Both snapshots' bin counts side by side: ``(bin, __rn__, __cn__,
+    __rt__, __ct__, __p__, __q__)`` — counts (0 where a side lacks the
+    bin), per-side totals, and the per-side fractions (null over an
+    empty side)."""
+    rc = _bin_counts(ref, column, edges, "__rn__")
+    cc = _bin_counts(cur, column, edges, "__cn__").withColumnRenamed(
+        "bin", "__cbin__"
+    )
+    # null-SAFE bin join: in categorical mode null is a real category
+    # and must line up across snapshots (a bare key join would emit two
+    # disjoint null rows)
+    joined = rc.join(
+        cc, rc["bin"].eqNullSafe(cc["__cbin__"]), "full"
+    ).select(
+        F.coalesce(rc["bin"], cc["__cbin__"]).alias("bin"),
+        F.coalesce(F.col("__rn__"), F.lit(0)).alias("__rn__"),
+        F.coalesce(F.col("__cn__"), F.lit(0)).alias("__cn__"),
+    )
+    tot = joined.agg(
+        F.coalesce(F.sum("__rn__"), F.lit(0)).alias("__rt__"),
+        F.coalesce(F.sum("__cn__"), F.lit(0)).alias("__ct__"),
+    )
+    return joined.crossJoin(F.broadcast(tot)).select(
+        "*",
+        (F.col("__rn__") / _nonzero("__rt__")).alias("__p__"),
+        (F.col("__cn__") / _nonzero("__ct__")).alias("__q__"),
+    )
+
+
+def _value_counts(df: DataFrame, column: str, name: str, *keys) -> DataFrame:
+    """``(*keys, __v__, name)`` per-distinct-value counts of ``column``
+    cast to double — the first stage of every rank test, batch and
+    streamed. Null and NaN values drop (pandas/scipy missing semantics;
+    Spark would otherwise group NaN as a value), as do null keys.
+    ``keys`` are aliased key Columns."""
+    base = df.select(*keys, F.col(column).cast("double").alias("__v__"))
+    names = base.columns if keys else ["__v__"]
+    ok = F.col("__v__").isNotNull() & ~F.isnan("__v__")
+    for k in names[:-1]:
+        ok = F.col(k).isNotNull() & ok
+    return base.where(ok).groupBy(*names).agg(F.count(F.lit(1)).alias(name))
+
+
+def _joined_counts(rc: DataFrame, cc: DataFrame) -> DataFrame:
+    """``(__v__, __rn__, __cn__)``: the two sides' value counts
+    full-outer-joined, 0 where a side lacks the value, lazily
+    checkpointed — the prefix-sum pass and the totals both read it, so
+    the snapshots behind it stream through once."""
+    return (
+        rc.join(cc, "__v__", "full_outer")
+        .select(
+            "__v__",
+            F.coalesce("__rn__", F.lit(0)).alias("__rn__"),
+            F.coalesce("__cn__", F.lit(0)).alias("__cn__"),
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
+def _rank_sum_aggs(t, run):
+    """The ref side's midrank sum ``__r1__`` and the tie term
+    ``__ties__ = sum(t^3 - t)`` as aggregates over the joined counts,
+    from each value's total count ``t`` and its running total ``run``
+    (midrank = rows before + (t+1)/2)."""
+    mid = (run - t) + (t + 1) / 2.0
+    tt = t.cast("double")
+    return (
+        F.sum(F.col("__rn__") * mid).alias("__r1__"),
+        F.sum(tt * tt * tt - tt).alias("__ties__"),
+    )
+
+
+def _u_z(n1, n2):
+    """Mann-Whitney ``u`` (ref side) and its normal-approximation
+    ``z`` with the tie-corrected variance ``(n1*n2/12) * (N+1 -
+    sum(t^3-t)/(N*(N-1)))``, from the :func:`_rank_sum_aggs` columns.
+    ``u`` is null when a side is empty, ``z`` also when all values
+    tie."""
+    nn = n1 + n2
+    u = F.col("__r1__") - n1 * (n1 + 1) / 2.0
+    var = (n1 * n2 / 12.0) * (
+        (nn + 1) - F.col("__ties__") / F.when(nn > 1, nn * (nn - 1))
+    )
+    ok = (n1 > 0) & (n2 > 0)
+    return (
+        F.when(ok, u).alias("u"),
+        F.round(
+            F.when(ok & (var > 0), (u - n1 * n2 / 2.0) / F.sqrt(var)), 6
+        ).alias("z"),
+    )
+
+
+def _contingency_cells(sdf: DataFrame, col_a: str, col_b: str) -> DataFrame:
+    """Observed contingency cells ``(__a__, __b__, __o__)`` of two
+    categorical columns (string-cast, rows with a null on either side
+    dropped) in ONE hash agg, lazily checkpointed so the raw table
+    streams through once while marginals and totals re-read the
+    cell-sized frame. Shared by :func:`chi2_association` and
+    ``evaluation.cohens_kappa``."""
+    base = sdf.select(
+        F.col(col_a).cast("string").alias("__a__"),
+        F.col(col_b).cast("string").alias("__b__"),
+    ).where(F.col("__a__").isNotNull() & F.col("__b__").isNotNull())
+    return (
+        base.groupBy("__a__", "__b__")
+        .agg(F.count(F.lit(1)).alias("__o__"))
+        .localCheckpoint(eager=False)
+    )
+
+
 def drift_bins(
     ref: DataFrame,
     cur: DataFrame,
@@ -73,54 +216,17 @@ def drift_bins(
     Fractions are computed against each snapshot's non-null total (for
     numeric) / full total (categorical, where null is a category);
     absent bins clamp to ``eps`` before the logs, the standard PSI
-    convention. Everything after the two count aggregations is
-    bin-cardinality data.
+    convention. A side with no rows has null fractions, and its
+    PSI/KL terms take the ``eps`` floor. Plan: the shared binned core
+    (module docstring).
     """
-    c = F.col(column)
-    if edges is not None:
-        key = _bin_expr(c.cast("double"), edges)
-        rf = ref.where(c.isNotNull())
-        cf = cur.where(c.isNotNull())
-    else:
-        key = c.cast("string")
-        rf, cf = ref, cur
-
-    def counts(df, name):
-        return (
-            df.groupBy(key.alias("bin"))
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    rc, cc = counts(rf, "__rn__"), counts(cf, "__cn__")
-    # null-SAFE bin join: in categorical mode null is a real category
-    # and must line up across snapshots (a bare key join would emit two
-    # disjoint null rows)
-    cc = cc.withColumnRenamed("bin", "__cbin__")
-    joined = rc.join(
-        cc, rc["bin"].eqNullSafe(cc["__cbin__"]), "full"
-    ).select(
-        F.coalesce(rc["bin"], cc["__cbin__"]).alias("bin"),
-        "__rn__", "__cn__",
-    )
-    tot = joined.agg(
-        F.coalesce(F.sum("__rn__"), F.lit(0)).alias("__rt__"),
-        F.coalesce(F.sum("__cn__"), F.lit(0)).alias("__ct__"),
-    )
-    j = joined.crossJoin(F.broadcast(tot))
-    p = F.greatest(
-        F.coalesce(F.col("__rn__"), F.lit(0)) / F.col("__rt__"),
-        F.lit(float(eps)),
-    )
-    q = F.greatest(
-        F.coalesce(F.col("__cn__"), F.lit(0)) / F.col("__ct__"),
-        F.lit(float(eps)),
-    )
+    j = _binned(ref, cur, column, edges)
+    p = F.greatest(F.col("__p__"), F.lit(float(eps)))
+    q = F.greatest(F.col("__q__"), F.lit(float(eps)))
     return j.select(
         "bin",
-        F.round(F.coalesce(F.col("__rn__"), F.lit(0)) / F.col("__rt__"), 6)
-        .alias("ref_frac"),
-        F.round(F.coalesce(F.col("__cn__"), F.lit(0)) / F.col("__ct__"), 6)
-        .alias("cur_frac"),
+        F.round("__p__", 6).alias("ref_frac"),
+        F.round("__q__", 6).alias("cur_frac"),
         F.round((p - q) * F.log(p / q), 6).alias("psi_term"),
         F.round(p * F.log(p / q), 6).alias("kl_term"),
     )
@@ -132,58 +238,13 @@ def ks_statistic(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
     ``(ks, n_ref, n_cur)`` — ``max |ECDF_ref(x) - ECDF_cur(x)|`` over
     every distinct value, never a sampled or binned approximation
     (the bin-free complement to :func:`drift_bins`: PSI needs edges
-    chosen up front; KS sees any shift the data can express).
+    chosen up front; KS sees any shift the data can express). Null and
+    NaN values are dropped; ``ks`` is null when a side is empty.
 
-    Scale shape: each snapshot reduces to per-distinct-value counts in
-    ONE hash aggregation, the two count frames full-outer-join on the
-    value and the joined count frame is lazily checkpointed (so the
-    raw snapshots stream through once even though both the prefix-sum
-    pass and the totals read it), BOTH running totals ride one
-    windowless bucket prefix-sum pass (operators/ranking — balanced
-    exchange, driver sees only per-bucket totals), and the
-    sup-distance is one scalar aggregate. Null and NaN values are
-    dropped (pandas/scipy missing semantics; Spark would otherwise
-    group NaN as a value).
+    This is the KS column of :func:`rank_scorecard`; the optimizer
+    prunes the Mann-Whitney terms it does not return.
     """
-    from .ranking import with_global_cumagg
-
-    def counts(df, name):
-        c = F.col(column).cast("double")
-        return (
-            df.select(c.alias("__v__"))
-            .where(F.col("__v__").isNotNull() & ~F.isnan("__v__"))
-            .groupBy("__v__")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    rc, cc = counts(ref, "__rn__"), counts(cur, "__cn__")
-    joined = (
-        rc.join(cc, "__v__", "full_outer")
-        .select(
-            "__v__",
-            F.coalesce("__rn__", F.lit(0)).alias("__rn__"),
-            F.coalesce("__cn__", F.lit(0)).alias("__cn__"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    cum = with_global_cumagg(
-        joined,
-        ["__v__"],
-        [("__rn__", "sum", "__cr__"), ("__cn__", "sum", "__cc__")],
-    )
-    tot = joined.agg(
-        F.sum("__rn__").alias("__nr__"), F.sum("__cn__").alias("__nc__")
-    )
-    j = cum.crossJoin(F.broadcast(tot))
-    dist = F.abs(
-        F.col("__cr__") / F.col("__nr__").cast("double")
-        - F.col("__cc__") / F.col("__nc__").cast("double")
-    )
-    return j.agg(
-        F.round(F.max(dist), 6).alias("ks"),
-        F.max("__nr__").cast("bigint").alias("n_ref"),
-        F.max("__nc__").cast("bigint").alias("n_cur"),
-    )
+    return rank_scorecard(ref, cur, column).select("ks", "n_ref", "n_cur")
 
 
 def welch_ttest(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
@@ -242,57 +303,30 @@ def mann_whitney_u(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
     correction (ties make a 0.5 correction ill-defined); null when a
     side is empty or all values tie. Null and NaN values are dropped.
 
-    Scale shape: per-snapshot per-distinct-value counts in one hash
-    agg each, joined counts lazily checkpointed, midranks via the
-    windowless bucket prefix-sum pass, U / tie term / z in one scalar
-    aggregate — the same distinct-value plan as :func:`ks_statistic`
-    and ``evaluation.auc``.
+    Plan: the shared rank core (module docstring) with ONE running
+    total — of ``t = rn + cn`` — and the side sizes summed in the
+    scalar aggregate, so no totals join (``rank_scorecard`` needs both
+    running ECDFs and pays for them).
     """
     from .ranking import with_global_cumagg
 
-    def counts(df, name):
-        c = F.col(column).cast("double")
-        return (
-            df.select(c.alias("__v__"))
-            .where(F.col("__v__").isNotNull() & ~F.isnan("__v__"))
-            .groupBy("__v__")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    rc, cc = counts(ref, "__rn__"), counts(cur, "__cn__")
-    joined = (
-        rc.join(cc, "__v__", "full_outer")
-        .select(
-            "__v__",
-            F.coalesce("__rn__", F.lit(0)).alias("__rn__"),
-            F.coalesce("__cn__", F.lit(0)).alias("__cn__"),
-        )
-        .withColumn("__t__", F.col("__rn__") + F.col("__cn__"))
-        .localCheckpoint(eager=False)
+    joined = _joined_counts(
+        _value_counts(ref, column, "__rn__"),
+        _value_counts(cur, column, "__cn__"),
     )
     cum = with_global_cumagg(
-        joined, ["__v__"], [("__t__", "sum", "__cum__")]
+        joined.withColumn("__t__", F.col("__rn__") + F.col("__cn__")),
+        ["__v__"],
+        [("__t__", "sum", "__cum__")],
     )
-    mid = (F.col("__cum__") - F.col("__t__")) + (F.col("__t__") + 1) / 2.0
-    tt = F.col("__t__").cast("double")
     agg = cum.agg(
-        F.sum(F.col("__rn__") * mid).alias("__r1__"),
+        *_rank_sum_aggs(F.col("__t__"), F.col("__cum__")),
         F.sum("__rn__").cast("double").alias("__n1__"),
         F.sum("__cn__").cast("double").alias("__n2__"),
-        F.sum(tt * tt * tt - tt).alias("__ties__"),
     )
     n1, n2 = F.col("__n1__"), F.col("__n2__")
-    nn = n1 + n2
-    u = F.col("__r1__") - n1 * (n1 + 1) / 2.0
-    var = (n1 * n2 / 12.0) * (
-        (nn + 1) - F.col("__ties__") / (nn * (nn - 1))
-    )
-    ok = (n1 > 0) & (n2 > 0)
     return agg.select(
-        F.when(ok, u).alias("u"),
-        F.round(
-            F.when(ok & (var > 0), (u - n1 * n2 / 2.0) / F.sqrt(var)), 6
-        ).alias("z"),
+        *_u_z(n1, n2),
         n1.cast("bigint").alias("n_ref"),
         n2.cast("bigint").alias("n_cur"),
     )
@@ -303,31 +337,16 @@ def rank_scorecard(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
     ``(ks, u, z, n_ref, n_cur)`` — the exact KS sup-distance of
     :func:`ks_statistic` and the exact tie-corrected Mann-Whitney U/z
     of :func:`mann_whitney_u`, computed together. The two tests share
-    their entire scaffolding (per-snapshot distinct-value counts, the
-    full-outer count join, the windowless bucket prefix-sum pass:
-    running ECDF numerators double as midrank inputs since
-    ``cum(t) = cum(rn) + cum(cn)``), so the nightly drift gate pays
-    one plan instead of two — the batched-tests use of the shared
-    ranked-values stage. Identical null/NaN and degenerate-edge
-    semantics to the standalone operators (pinned by differential
-    test).
-
-    Scale shape: one hash agg per snapshot, the joined distinct-value
-    count frame lazily checkpointed, ONE prefix-sum pass serving both
-    running totals, one scalar aggregate for sup-distance, rank sum,
-    and tie term together."""
-
-    def counts(df, name):
-        c = F.col(column).cast("double")
-        return (
-            df.select(c.alias("__v__"))
-            .where(F.col("__v__").isNotNull() & ~F.isnan("__v__"))
-            .groupBy("__v__")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    rc, cc = counts(ref, "__rn__"), counts(cur, "__cn__")
-    return rank_scorecard_from_counts(rc, cc)
+    their entire scaffolding (running ECDF numerators double as
+    midrank inputs since ``cum(t) = cum(rn) + cum(cn)``), so the
+    nightly drift gate pays one plan instead of two. Identical
+    null/NaN and degenerate-edge semantics to the standalone
+    operators (pinned by differential test). Plan: the shared rank
+    core (module docstring)."""
+    return rank_scorecard_from_counts(
+        _value_counts(ref, column, "__rn__"),
+        _value_counts(cur, column, "__cn__"),
+    )
 
 
 def rank_scorecard_from_counts(rc: DataFrame, cc: DataFrame) -> DataFrame:
@@ -336,19 +355,11 @@ def rank_scorecard_from_counts(rc: DataFrame, cc: DataFrame) -> DataFrame:
     (__v__, __cn__)`` for the current side. Distinct-value counts
     merge by plain addition, so this is the entry point for stored or
     streamed count snapshots (``streaming/curation.read_rank_scorecard``
-    sums per-micro-batch counts and lands here); the batch operator is
-    this same core over two freshly aggregated count frames."""
+    sums per-micro-batch counts and lands here); the batch operators
+    are this same core over two freshly aggregated count frames."""
     from .ranking import with_global_cumagg
 
-    joined = (
-        rc.join(cc, "__v__", "full_outer")
-        .select(
-            "__v__",
-            F.coalesce("__rn__", F.lit(0)).alias("__rn__"),
-            F.coalesce("__cn__", F.lit(0)).alias("__cn__"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    joined = _joined_counts(rc, cc)
     cum = with_global_cumagg(
         joined,
         ["__v__"],
@@ -359,33 +370,22 @@ def rank_scorecard_from_counts(rc: DataFrame, cc: DataFrame) -> DataFrame:
     )
     j = cum.crossJoin(F.broadcast(tot))
     dist = F.abs(
-        F.col("__cr__") / F.col("__nr__").cast("double")
-        - F.col("__cc__") / F.col("__nc__").cast("double")
+        F.col("__cr__") / _nonzero("__nr__")
+        - F.col("__cc__") / _nonzero("__nc__")
     )
-    t = F.col("__rn__") + F.col("__cn__")
-    run = F.col("__cr__") + F.col("__cc__")  # == cumulative t, exactly
-    mid = (run - t) + (t + 1) / 2.0
-    tt = t.cast("double")
     agg = j.agg(
         F.round(F.max(dist), 6).alias("__ks__"),
-        F.sum(F.col("__rn__") * mid).alias("__r1__"),
-        F.sum(tt * tt * tt - tt).alias("__ties__"),
+        *_rank_sum_aggs(
+            F.col("__rn__") + F.col("__cn__"),
+            F.col("__cr__") + F.col("__cc__"),  # == cumulative t, exactly
+        ),
         F.max("__nr__").cast("double").alias("__n1__"),
         F.max("__nc__").cast("double").alias("__n2__"),
     )
     n1, n2 = F.col("__n1__"), F.col("__n2__")
-    nn = n1 + n2
-    u = F.col("__r1__") - n1 * (n1 + 1) / 2.0
-    var = (n1 * n2 / 12.0) * (
-        (nn + 1) - F.col("__ties__") / (nn * (nn - 1))
-    )
-    ok = (n1 > 0) & (n2 > 0)
     return agg.select(
         F.col("__ks__").alias("ks"),
-        F.when(ok, u).alias("u"),
-        F.round(
-            F.when(ok & (var > 0), (u - n1 * n2 / 2.0) / F.sqrt(var)), 6
-        ).alias("z"),
+        *_u_z(n1, n2),
         n1.cast("bigint").alias("n_ref"),
         n2.cast("bigint").alias("n_cur"),
     )
@@ -405,22 +405,12 @@ def chi2_association(sdf: DataFrame, col_a: str, col_b: str) -> DataFrame:
     Zero-expected cells never arise: the identity
     ``chi2 = n * (sum_observed o^2/(r_a * c_b)) - n`` (and MI's
     ``0 * log 0 = 0`` convention) means only OBSERVED contingency
-    cells are needed — no dense cross of the marginals. Scale shape:
-    ONE hash agg to the observed contingency cells, lazily
-    checkpointed so the raw table streams through once (marginals,
-    totals, and the joined statistic all re-read the cell frame) —
-    marginals are class-sized re-aggs broadcast back, the statistic
-    is one scalar agg.
+    cells are needed — no dense cross of the marginals. Plan: the
+    checkpointed cells of :func:`_contingency_cells`; marginals are
+    class-sized re-aggs broadcast back, the statistic is one scalar
+    agg.
     """
-    base = sdf.select(
-        F.col(col_a).cast("string").alias("__a__"),
-        F.col(col_b).cast("string").alias("__b__"),
-    ).where(F.col("__a__").isNotNull() & F.col("__b__").isNotNull())
-    cont = (
-        base.groupBy("__a__", "__b__")
-        .agg(F.count(F.lit(1)).alias("__o__"))
-        .localCheckpoint(eager=False)
-    )
+    cont = _contingency_cells(sdf, col_a, col_b)
     ra = cont.groupBy("__a__").agg(F.sum("__o__").alias("__ca__"))
     cb = cont.groupBy("__b__").agg(F.sum("__o__").alias("__cb__"))
     tot = cont.agg(
@@ -497,44 +487,12 @@ def js_divergence(
     ``js_distance = sqrt(js / ln 2)`` is the [0, 1] metric form.
     Numeric binning with explicit ``edges`` (nulls dropped);
     ``edges=None`` bins categorically (null is its own category),
-    exactly as :func:`drift_bins`.
-
-    Scale shape: identical to :func:`drift_bins` — each snapshot
-    reduces to bin counts in ONE hash aggregation, the bin frames
-    full-outer-join null-safely, totals broadcast back, and the
-    divergence is one bin-sized scalar aggregate.
+    exactly as :func:`drift_bins`; ``js`` is null when a side is empty.
+    Plan: the shared binned core (module docstring) and one bin-sized
+    scalar aggregate.
     """
-    c = F.col(column)
-    if edges is not None:
-        key = _bin_expr(c.cast("double"), edges)
-        rf = ref.where(c.isNotNull())
-        cf = cur.where(c.isNotNull())
-    else:
-        key = c.cast("string")
-        rf, cf = ref, cur
-
-    def counts(df, name):
-        return df.groupBy(key.alias("bin")).agg(F.count(F.lit(1)).alias(name))
-
-    rc, cc = counts(rf, "__rn__"), counts(cf, "__cn__")
-    cc = cc.withColumnRenamed("bin", "__cbin__")
-    joined = rc.join(
-        cc, rc["bin"].eqNullSafe(cc["__cbin__"]), "full"
-    ).select(
-        F.coalesce(F.col("__rn__"), F.lit(0)).alias("__rn__"),
-        F.coalesce(F.col("__cn__"), F.lit(0)).alias("__cn__"),
-    )
-    tot = joined.agg(
-        F.coalesce(F.sum("__rn__"), F.lit(0)).alias("__rt__"),
-        F.coalesce(F.sum("__cn__"), F.lit(0)).alias("__ct__"),
-    )
-    j = joined.crossJoin(F.broadcast(tot))
-    # null-guarded denominators: an empty side must yield null (the
-    # final gate), not an ANSI divide-by-zero error
-    rt = F.when(F.col("__rt__") > 0, F.col("__rt__"))
-    ct = F.when(F.col("__ct__") > 0, F.col("__ct__"))
-    p = F.col("__rn__") / rt
-    q = F.col("__cn__") / ct
+    j = _binned(ref, cur, column, edges)
+    p, q = F.col("__p__"), F.col("__q__")
     m = (p + q) / 2.0
     # 0 * ln(0/m) == 0 by convention: gate each side's term on count>0
     term = (
@@ -600,29 +558,12 @@ def ks_battery(
     (matching the streaming store's write-time filter). Feed the
     ``p`` column to :func:`fdr_bh` for multiple-testing control.
 
-    Scale shape: each snapshot reduces to per-(key, distinct value)
-    counts in ONE hash aggregation, the count frames full-outer-join
-    on (key, value), and BOTH running ECDFs plus both per-key totals
-    ride keyed windows on the SAME key partitioning (one shuffle,
-    reused); the sup-distance is one per-key aggregate on that same
-    partitioning. Every intermediate is distinct-(key, value)-sized;
-    skew follows the largest key's distinct-value count, never its row
-    count.
+    Plan: per-(key, distinct value) counts (:func:`_value_counts`),
+    then :func:`ks_battery_from_counts`.
     """
-
-    def counts(df, name):
-        c = F.col(column).cast("double")
-        return (
-            df.select(F.col(key_col).alias("__k__"), c.alias("__v__"))
-            .where(
-                F.col("__k__").isNotNull()
-                & F.col("__v__").isNotNull() & ~F.isnan("__v__")
-            )
-            .groupBy("__k__", "__v__")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    rc, cc = counts(ref, "__rn__"), counts(cur, "__cn__")
+    key = F.col(key_col).alias("__k__")
+    rc = _value_counts(ref, column, "__rn__", key)
+    cc = _value_counts(cur, column, "__cn__", key)
     return ks_battery_from_counts(rc, cc, terms=terms).withColumnRenamed(
         "key", key_col
     )
@@ -636,7 +577,13 @@ def ks_battery_from_counts(
     ``(__k__, __v__, __cn__)``. The shared read path for the streaming
     twin (``streaming/curation.read_ks_battery``), so streamed reading
     equals the batch battery of everything ingested, exactly. Returns
-    ``(key, ks, p, n_ref, n_cur)``."""
+    ``(key, ks, p, n_ref, n_cur)``.
+
+    Scale shape: the count frames full-outer-join on (key, value), and
+    BOTH running ECDFs plus both per-key totals ride keyed windows on
+    the SAME key partitioning (one shuffle, reused); the sup-distance
+    is one per-key aggregate on that same partitioning. Skew follows
+    the largest key's distinct-value count, never its row count."""
     joined = rc.join(cc, ["__k__", "__v__"], "full").select(
         "__k__", "__v__",
         F.coalesce(F.col("__rn__"), F.lit(0)).alias("__rn__"),
@@ -653,14 +600,15 @@ def ks_battery_from_counts(
         F.sum("__rn__").over(wk).alias("__rt__"),
         F.sum("__cn__").over(wk).alias("__ct__"),
     )
-    rt = F.when(F.col("__rt__") > 0, F.col("__rt__").cast("double"))
-    ct = F.when(F.col("__ct__") > 0, F.col("__ct__").cast("double"))
+    rt, ct = _nonzero("__rt__"), _nonzero("__ct__")
     d = F.abs(F.col("__crn__") / rt - F.col("__ccn__") / ct)
     agg = stepped.groupBy("__k__").agg(
         F.max(d).alias("__ks__"),
         F.max("__rt__").alias("__rt__"),
         F.max("__ct__").alias("__ct__"),
     )
+    # en > 0 wherever ks is non-null (both sides present), the only
+    # rows the p-value branch evaluates
     en = (
         F.col("__rt__").cast("double") * F.col("__ct__")
         / (F.col("__rt__") + F.col("__ct__"))

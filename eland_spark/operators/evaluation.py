@@ -217,21 +217,15 @@ def cohens_kappa(sdf: DataFrame, col_a: str, col_b: str) -> DataFrame:
     when ``pe == 1`` (both raters constant — agreement is undefined).
     Rows with a null on either side are dropped.
 
-    Scale shape: ONE full-scan hash aggregation to the observed
-    contingency cells (class^2-sized), lazily checkpointed so the raw
-    table streams through exactly once — n/po and both marginals are
-    cell-sized re-aggs of it, the pe numerator a class-sized join, the
-    assembly a 1-row scalar join. Nothing row-sized collects.
+    Scale shape: the checkpointed observed contingency cells of
+    ``drift._contingency_cells`` (class^2-sized, the raw table streams
+    through once) — n/po and both marginals are cell-sized re-aggs of
+    it, the pe numerator a class-sized join, the assembly a 1-row
+    scalar join. Nothing row-sized collects.
     """
-    base = sdf.select(
-        F.col(col_a).cast("string").alias("__a__"),
-        F.col(col_b).cast("string").alias("__b__"),
-    ).where(F.col("__a__").isNotNull() & F.col("__b__").isNotNull())
-    cont = (
-        base.groupBy("__a__", "__b__")
-        .agg(F.count(F.lit(1)).alias("__o__"))
-        .localCheckpoint(eager=False)
-    )
+    from .drift import _contingency_cells
+
+    cont = _contingency_cells(sdf, col_a, col_b)
     obs = cont.agg(
         F.sum("__o__").alias("__n__"),
         (

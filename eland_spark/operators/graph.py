@@ -213,14 +213,6 @@ def pagerank(
     lazy = tol is None and _lazy_unroll(
         int(iterations), branches=3 if dangling == "redistribute" else 2
     )
-    # the initial rank frame is base + a literal column. In LAZY mode
-    # one up-front barrier pays a single build-time job wave but makes
-    # every unrolled round reference a flat node-sized leaf instead of
-    # re-inlining the nodes/outdeg/teleport join pyramid branches**K
-    # times — Catalyst ANALYSIS of the unrolled tree was the dominant
-    # cost (r9: pagerank_personalized spent ~2.5 s of its 3.0 s steady
-    # in plan build). In barrier mode the per-round checkpoints already
-    # truncate lineage, so the extra wave would be pure cost.
     # the initial rank frame is base + a literal column — its two
     # round-1 branches share base's exchanges (canonically equal, AQE
     # reuses them), so barrier-ing it would only add a build-time job

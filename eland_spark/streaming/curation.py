@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from .._literals import array_lit
 from ..operators.dedup import shingles
 from ..operators.text import quality_score
+from .sinks import _read_batches, _write_batches
 
 __all__ = [
     "stream_contamination_flags",
@@ -164,6 +165,8 @@ def stream_url_dedup(
     return canon.dropDuplicates([canon_col])
 
 
+
+
 def stream_bloom_update(
     stream_sdf: DataFrame,
     path: str,
@@ -184,16 +187,10 @@ def stream_bloom_update(
     rewrite :func:`read_bloom`'s output and drop old dirs."""
     from ..operators.sketches import bloom_sketches
 
-    from .sinks import foreach_batch_sink
-
     by = list(by)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        sk = bloom_sketches(batch_df, value_col, by, m_bits, n_hashes)
-        sk.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
-
-    return foreach_batch_sink(
-        stream_sdf, _write, checkpoint, output_mode="append",
+    return _write_batches(
+        stream_sdf, path, checkpoint,
+        lambda df: bloom_sketches(df, value_col, by, m_bits, n_hashes),
         timeout_sec=timeout_sec,
     )
 
@@ -218,16 +215,10 @@ def stream_kmv_update(
     sketch of everything ingested."""
     from ..operators.sketches import kmv_sketches
 
-    from .sinks import foreach_batch_sink
-
     by = list(by)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        sk = kmv_sketches(batch_df, value_col, by, k)
-        sk.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
-
-    return foreach_batch_sink(
-        stream_sdf, _write, checkpoint, output_mode="append",
+    return _write_batches(
+        stream_sdf, path, checkpoint,
+        lambda df: kmv_sketches(df, value_col, by, k),
         timeout_sec=timeout_sec,
     )
 
@@ -237,16 +228,9 @@ def read_kmv(spark, path: str, by=(), k: int = 256) -> DataFrame:
     distinct-union the per-batch hash arrays, keep the K smallest, and
     estimate — one aggregation over sketch rows (never raw data).
     Returns ``estimate`` per group."""
-    import glob as _glob
-    import os as _os
-
     from ..operators.sketches import kmv_rollup_estimate
 
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* directories under {path}")
-    df = spark.read.option("basePath", path).parquet(*dirs)
-    return kmv_rollup_estimate(df, by=list(by), k=k)
+    return kmv_rollup_estimate(_read_batches(spark, path), by=list(by), k=k)
 
 
 def stream_sample_update(
@@ -268,16 +252,10 @@ def stream_sample_update(
     sketching all ingested rows at once."""
     from ..operators.sketches import sample_sketches
 
-    from .sinks import foreach_batch_sink
-
     by = list(by)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        sk = sample_sketches(batch_df, value_col, id_col, by, k)
-        sk.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
-
-    return foreach_batch_sink(
-        stream_sdf, _write, checkpoint, output_mode="append",
+    return _write_batches(
+        stream_sdf, path, checkpoint,
+        lambda df: sample_sketches(df, value_col, id_col, by, k),
         timeout_sec=timeout_sec,
     )
 
@@ -286,16 +264,9 @@ def read_sample(spark, path: str, by=(), k: int = 512) -> DataFrame:
     """Merge-on-read over a :func:`stream_sample_update` directory:
     one rollup aggregation over sketch rows; feed the result to
     ``operators.sketches.quantile_from_sample``."""
-    import glob as _glob
-    import os as _os
-
     from ..operators.sketches import sample_rollup
 
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* directories under {path}")
-    df = spark.read.option("basePath", path).parquet(*dirs)
-    return sample_rollup(df, by=list(by), k=k)
+    return sample_rollup(_read_batches(spark, path), by=list(by), k=k)
 
 
 def read_bloom(spark, path: str, by=()) -> DataFrame:
@@ -303,14 +274,9 @@ def read_bloom(spark, path: str, by=()) -> DataFrame:
     bit_or per (group, word) across every batch sketch — identical to
     a from-scratch sketch of everything ingested (OR is the Bloom
     merge), ready for ``operators/sketches.bloom_contains``."""
-    import glob as _glob
-    import os as _os
-
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* directories under {path}")
-    df = spark.read.option("basePath", path).parquet(*dirs)
-    return df.groupBy(*list(by), "word").agg(F.bit_or("bits").alias("bits"))
+    return _read_batches(spark, path).groupBy(*list(by), "word").agg(
+        F.bit_or("bits").alias("bits")
+    )
 
 
 def stream_cms_update(
@@ -333,16 +299,10 @@ def stream_cms_update(
     sketch of everything ingested."""
     from ..operators.sketches import cms_sketches
 
-    from .sinks import foreach_batch_sink
-
     by = list(by)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        sk = cms_sketches(batch_df, value_col, by, depth, width)
-        sk.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
-
-    return foreach_batch_sink(
-        stream_sdf, _write, checkpoint, output_mode="append",
+    return _write_batches(
+        stream_sdf, path, checkpoint,
+        lambda df: cms_sketches(df, value_col, by, depth, width),
         timeout_sec=timeout_sec,
     )
 
@@ -352,16 +312,9 @@ def read_cms(spark, path: str, by=()) -> DataFrame:
     counters per (group, row, bucket) across every batch sketch —
     identical to a from-scratch sketch of everything ingested, ready
     for ``operators/sketches.cms_estimate``."""
-    import glob as _glob
-    import os as _os
-
     from ..operators.sketches import cms_rollup
 
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* directories under {path}")
-    df = spark.read.option("basePath", path).parquet(*dirs)
-    return cms_rollup(df, by=list(by))
+    return cms_rollup(_read_batches(spark, path), by=list(by))
 
 
 def stream_mg_update(
@@ -386,16 +339,10 @@ def stream_mg_update(
     total distinct items stay <= k."""
     from ..operators.sketches import mg_sketches
 
-    from .sinks import foreach_batch_sink
-
     by = list(by)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        sk = mg_sketches(batch_df, value_col, by, k)
-        sk.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
-
-    return foreach_batch_sink(
-        stream_sdf, _write, checkpoint, output_mode="append",
+    return _write_batches(
+        stream_sdf, path, checkpoint,
+        lambda df: mg_sketches(df, value_col, by, k),
         timeout_sec=timeout_sec,
     )
 
@@ -405,16 +352,9 @@ def read_mg(spark, path: str, by=(), k: int = 64) -> DataFrame:
     every batch sketch, sum per item, re-compress to <=k entries
     (operators/sketches.mg_rollup) — ready for
     ``operators/sketches.mg_items``."""
-    import glob as _glob
-    import os as _os
-
     from ..operators.sketches import mg_rollup
 
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* directories under {path}")
-    df = spark.read.option("basePath", path).parquet(*dirs)
-    return mg_rollup(df, by=list(by), k=k)
+    return mg_rollup(_read_batches(spark, path), by=list(by), k=k)
 
 
 def stream_regression_update(
@@ -438,14 +378,12 @@ def stream_regression_update(
     monitoring-grade numerics (the batch operator's builtin regr_*
     is the stable path); pair with a shifted/centered x (e.g. epoch
     minus a fixed origin) for large-magnitude covariates."""
-    from .sinks import foreach_batch_sink
-
     by = list(by)
+    x = F.col(x_col).cast("double")
+    y = F.col(y_col).cast("double")
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        x = F.col(x_col).cast("double")
-        y = F.col(y_col).cast("double")
-        stats = (
+    def stats(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.where(x.isNotNull() & y.isNotNull())
             .groupBy(*by)
             .agg(
@@ -457,11 +395,9 @@ def stream_regression_update(
                 F.sum(x * y).alias("sxy"),
             )
         )
-        stats.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
 
-    return foreach_batch_sink(
-        stream_sdf, _write, checkpoint, output_mode="append",
-        timeout_sec=timeout_sec,
+    return _write_batches(
+        stream_sdf, path, checkpoint, stats, timeout_sec=timeout_sec
     )
 
 
@@ -471,14 +407,8 @@ def read_linear_fit(spark, path: str, by=()) -> DataFrame:
     ``(by..., slope, intercept, r2, n)`` — null slope/r2 for constant
     x and r2 = 1.0 for constant y with varying x, matching the batch
     operator's REGR_* conventions (Spark regr_r2)."""
-    import glob as _glob
-    import os as _os
-
     by = list(by)
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* directories under {path}")
-    df = spark.read.option("basePath", path).parquet(*dirs)
+    df = _read_batches(spark, path)
     sums = [F.sum(c).alias(c) for c in ("n", "sx", "sy", "sxx", "syy", "sxy")]
     tot = df.groupBy(*by).agg(*sums) if by else df.agg(*sums)
     n = F.col("n").cast("double")
@@ -514,33 +444,18 @@ def stream_drift_update(
 ):
     """Maintain drift bin counts over a stream — the streaming half of
     ``operators/drift``: each micro-batch writes its own bin-count rows
-    under ``<path>/batch=<id>/`` (idempotent in batch_id). Bin counts
+    ``(bin, n)`` under ``<path>/batch=<id>/`` (idempotent in
+    batch_id), binned exactly as the batch ``drift_bins``. Bin counts
     merge by plain ADDITION, so summing at read time
     (:func:`read_drift_bins`) is lossless — the merged counts equal a
     from-scratch binning of everything ingested, ready to PSI against
     a reference snapshot. Numeric mode needs the same explicit
     ``edges`` at every call site (they define the bin ids)."""
-    from ..operators.drift import _bin_expr
+    from ..operators.drift import _bin_counts
 
-    from pyspark.sql import functions as F
-
-    from .sinks import foreach_batch_sink
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        c = F.col(value_col)
-        if edges is not None:
-            key = _bin_expr(c.cast("double"), edges)
-            src = batch_df.where(c.isNotNull())
-        else:
-            key = c.cast("string")
-            src = batch_df
-        counts = src.groupBy(key.alias("bin")).agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        counts.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
-
-    return foreach_batch_sink(
-        stream_sdf, _write, checkpoint, output_mode="append",
+    return _write_batches(
+        stream_sdf, path, checkpoint,
+        lambda df: _bin_counts(df, value_col, edges, "n"),
         timeout_sec=timeout_sec,
     )
 
@@ -548,16 +463,9 @@ def stream_drift_update(
 def read_drift_bins(spark, path: str) -> DataFrame:
     """Merge-on-read over a :func:`stream_drift_update` directory: sum
     bin counts across batches — lossless (counts add)."""
-    import glob as _glob
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* directories under {path}")
-    df = spark.read.option("basePath", path).parquet(*dirs)
-    return df.groupBy("bin").agg(F.sum("n").alias("n"))
+    return _read_batches(spark, path).groupBy("bin").agg(
+        F.sum("n").alias("n")
+    )
 
 
 def stream_value_counts_update(
@@ -577,22 +485,14 @@ def stream_value_counts_update(
     lossless — :func:`read_rank_scorecard` over the store equals the
     batch ``operators/drift.rank_scorecard`` of everything ingested.
     Null and NaN values are dropped at write time (the tests' missing
-    semantics), so the store only ever holds scoreable values."""
-    from pyspark.sql import functions as F
+    semantics, the batch operators' own counting step), so the store
+    only ever holds scoreable values."""
+    from ..operators.drift import _value_counts
 
-    from .sinks import foreach_batch_sink
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        c = F.col(value_col).cast("double")
-        counts = (
-            batch_df.where(c.isNotNull() & ~F.isnan(c))
-            .groupBy(c.alias("v"))
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        counts.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
-
-    return foreach_batch_sink(
-        stream_sdf, _write, checkpoint, output_mode="append",
+    return _write_batches(
+        stream_sdf, path, checkpoint,
+        lambda df: _value_counts(df, value_col, "n")
+        .withColumnRenamed("__v__", "v"),
         timeout_sec=timeout_sec,
     )
 
@@ -600,16 +500,7 @@ def stream_value_counts_update(
 def read_value_counts(spark, path: str) -> DataFrame:
     """Merge-on-read over a :func:`stream_value_counts_update`
     directory: sum per-value counts across batches — lossless."""
-    import glob as _glob
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* directories under {path}")
-    df = spark.read.option("basePath", path).parquet(*dirs)
-    return df.groupBy("v").agg(F.sum("n").alias("n"))
+    return _read_batches(spark, path).groupBy("v").agg(F.sum("n").alias("n"))
 
 
 def read_rank_scorecard(spark, path: str, ref: DataFrame, column: str) -> DataFrame:
@@ -621,21 +512,12 @@ def read_rank_scorecard(spark, path: str, ref: DataFrame, column: str) -> DataFr
     equals the batch ``rank_scorecard(ref, everything_ingested)``
     exactly (batch-twin pinned in tests). Returns the same 1-row
     ``(ks, u, z, n_ref, n_cur)`` frame."""
-    from pyspark.sql import functions as F
+    from ..operators.drift import _value_counts, rank_scorecard_from_counts
 
-    from ..operators.drift import rank_scorecard_from_counts
-
-    c = F.col(column).cast("double")
-    rc = (
-        ref.select(c.alias("__v__"))
-        .where(F.col("__v__").isNotNull() & ~F.isnan("__v__"))
-        .groupBy("__v__")
-        .agg(F.count(F.lit(1)).alias("__rn__"))
-    )
     cc = read_value_counts(spark, path).select(
         F.col("v").alias("__v__"), F.col("n").alias("__cn__")
     )
-    return rank_scorecard_from_counts(rc, cc)
+    return rank_scorecard_from_counts(_value_counts(ref, column, "__rn__"), cc)
 
 
 def stream_keyed_value_counts_update(
@@ -654,24 +536,13 @@ def stream_keyed_value_counts_update(
     :func:`read_ks_battery` over the store equals the batch
     ``operators/drift.ks_battery`` of everything ingested, exactly.
     Null keys and null/NaN values are dropped at write time."""
-    from pyspark.sql import functions as F
+    from ..operators.drift import _value_counts
 
-    from .sinks import foreach_batch_sink
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        c = F.col(value_col).cast("double")
-        counts = (
-            batch_df.where(
-                F.col(key_col).isNotNull()
-                & c.isNotNull() & ~F.isnan(c)
-            )
-            .groupBy(F.col(key_col).alias("k"), c.alias("v"))
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        counts.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
-
-    return foreach_batch_sink(
-        stream_sdf, _write, checkpoint, output_mode="append",
+    key = F.col(key_col).alias("k")
+    return _write_batches(
+        stream_sdf, path, checkpoint,
+        lambda df: _value_counts(df, value_col, "n", key)
+        .withColumnRenamed("__v__", "v"),
         timeout_sec=timeout_sec,
     )
 
@@ -679,16 +550,9 @@ def stream_keyed_value_counts_update(
 def read_keyed_value_counts(spark, path: str) -> DataFrame:
     """Merge-on-read over a :func:`stream_keyed_value_counts_update`
     directory: sum per-(key, value) counts across batches — lossless."""
-    import glob as _glob
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* directories under {path}")
-    df = spark.read.option("basePath", path).parquet(*dirs)
-    return df.groupBy("k", "v").agg(F.sum("n").alias("n"))
+    return _read_batches(spark, path).groupBy("k", "v").agg(
+        F.sum("n").alias("n")
+    )
 
 
 def read_ks_battery(
@@ -704,20 +568,9 @@ def read_ks_battery(
     (batch-twin pinned in tests). Returns ``(key_col, ks, p, n_ref,
     n_cur)``; feed ``p`` to ``operators/drift.fdr_bh`` for the
     FDR-controlled nightly gate."""
-    from pyspark.sql import functions as F
+    from ..operators.drift import _value_counts, ks_battery_from_counts
 
-    from ..operators.drift import ks_battery_from_counts
-
-    c = F.col(column).cast("double")
-    rc = (
-        ref.select(F.col(key_col).alias("__k__"), c.alias("__v__"))
-        .where(
-            F.col("__k__").isNotNull()
-            & F.col("__v__").isNotNull() & ~F.isnan("__v__")
-        )
-        .groupBy("__k__", "__v__")
-        .agg(F.count(F.lit(1)).alias("__rn__"))
-    )
+    rc = _value_counts(ref, column, "__rn__", F.col(key_col).alias("__k__"))
     cc = read_keyed_value_counts(spark, path).select(
         F.col("k").alias("__k__"), F.col("v").alias("__v__"),
         F.col("n").alias("__cn__"),
@@ -752,17 +605,12 @@ def stream_minhash_update(
     index streaming map-only through candidate generation)."""
     from ..operators.dedup import minhash_index_rows
 
-    from .sinks import foreach_batch_sink
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        rows = minhash_index_rows(
-            batch_df, F.col(text_col), F.col(id_col),
+    return _write_batches(
+        stream_sdf, path, checkpoint,
+        lambda df: minhash_index_rows(
+            df, F.col(text_col), F.col(id_col),
             k=k, num_hashes=num_hashes, bands=bands, portable=portable,
-        )
-        rows.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
-
-    return foreach_batch_sink(
-        stream_sdf, _write, checkpoint, output_mode="append",
+        ),
         timeout_sec=timeout_sec,
     )
 
@@ -772,15 +620,7 @@ def read_minhash(spark, path: str) -> DataFrame:
     identical to from-scratch :func:`minhash_index_rows` of everything
     ingested (per-doc rows need no merge math). Compaction = rewrite
     this output and drop old batch dirs."""
-    import glob as _glob
-    import os as _os
-
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* directories under {path}")
-    return spark.read.option("basePath", path).parquet(*dirs).select(
-        "id", "sig", "keys"
-    )
+    return _read_batches(spark, path).select("id", "sig", "keys")
 
 
 def stream_survival_counts_update(
@@ -801,14 +641,11 @@ def stream_survival_counts_update(
     everything ingested EXACTLY — the streaming retention-curve
     maintenance twin, same contract as the keyed drift-battery store.
     Null durations/events drop at write time."""
-    from pyspark.sql import functions as F
+    ev = F.col(event_col).cast("int")
+    keys = [F.col(group_col).alias("g")] if group_col else []
 
-    from .sinks import foreach_batch_sink
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        ev = F.col(event_col).cast("int")
-        keys = [F.col(group_col).alias("g")] if group_col else []
-        counts = (
+    def counts(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.where(
                 F.col(duration_col).isNotNull()
                 & F.col(event_col).isNotNull()
@@ -819,11 +656,9 @@ def stream_survival_counts_update(
                 F.sum(1 - ev).alias("n_censored"),
             )
         )
-        counts.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
 
-    return foreach_batch_sink(
-        stream_sdf, _write, checkpoint, output_mode="append",
-        timeout_sec=timeout_sec,
+    return _write_batches(
+        stream_sdf, path, checkpoint, counts, timeout_sec=timeout_sec
     )
 
 
@@ -837,17 +672,9 @@ def read_kaplan_meier(spark, path: str) -> DataFrame:
     when ``group_col`` was set), so the two halves of the twin cannot
     disagree on defaults. Returns the batch operator's
     (group?, t, n_risk, n_event, n_censored, survival) layout."""
-    import glob as _glob
-    import os as _os
-
-    from pyspark.sql import functions as F
-
     from ..operators.survival import kaplan_meier_from_counts
 
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* directories under {path}")
-    df = spark.read.option("basePath", path).parquet(*dirs)
+    df = _read_batches(spark, path)
     keys = ["g"] if "g" in df.columns else []
     merged = df.groupBy(*keys, "t").agg(
         F.sum("n_event").alias("n_event"),

@@ -24,6 +24,10 @@ eland/operations.py:1218-1246). Design for scale:
 
 from __future__ import annotations
 
+import glob
+import os
+import re
+import shutil
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -85,6 +89,53 @@ def foreach_batch_sink(
     return q
 
 
+def _batch_dirs(path: str) -> list[str]:
+    """The concrete ``batch=<id>`` dirs of a merge-on-read store. They
+    are expanded here because a ``batch=*`` glob handed to the reader
+    makes it probe a literal glob path for file-sink metadata (noisy
+    WARN)."""
+    return sorted(glob.glob(os.path.join(path, "batch=*")))
+
+
+def _write_batch(df: DataFrame, path: str, batch_id: int) -> None:
+    """Overwrite ``<path>/batch=<batch_id>/`` with ``df`` — the one
+    writer of the store format; overwriting makes a retried batch id
+    idempotent."""
+    df.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
+
+
+def _write_batches(
+    result: DataFrame,
+    path: str,
+    checkpoint: str,
+    build: Callable[[DataFrame], DataFrame],
+    output_mode: str = "append",
+    timeout_sec: int = 120,
+):
+    """Run ``result`` as a foreachBatch stream that writes
+    ``build(batch_df)`` to its own ``<path>/batch=<id>/`` dir — the
+    merge-on-read store every streaming sketch/count/upsert path uses;
+    read it back with :func:`_read_batches`."""
+
+    def _write(batch_df: DataFrame, batch_id: int) -> None:
+        _write_batch(build(batch_df), path, batch_id)
+
+    return foreach_batch_sink(
+        result, _write, checkpoint, output_mode=output_mode,
+        timeout_sec=timeout_sec,
+    )
+
+
+def _read_batches(spark: SparkSession, path: str) -> DataFrame:
+    """Every batch of a :func:`_write_batches` store as one frame, with
+    the ``batch`` id as a partition column from the directory layout
+    (so a filter on it prunes old batches)."""
+    dirs = _batch_dirs(path)
+    if not dirs:
+        raise FileNotFoundError(f"no batch=* directories under {path}")
+    return spark.read.option("basePath", path).parquet(*dirs)
+
+
 def foreach_batch_parquet_upsert(
     result: DataFrame,
     path: str,
@@ -96,12 +147,9 @@ def foreach_batch_parquet_upsert(
     idempotent (same id -> same directory); later batches refine
     earlier window/key rows and win at read time via
     :func:`read_upserted`."""
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
-
-    return foreach_batch_sink(
-        result, _write, checkpoint, output_mode="update", timeout_sec=timeout_sec
+    return _write_batches(
+        result, path, checkpoint, lambda df: df, output_mode="update",
+        timeout_sec=timeout_sec,
     )
 
 
@@ -113,15 +161,7 @@ def read_upserted(
     ``batch`` partition column comes from the directory layout, so
     partition pruning can skip old batches when a caller filters on
     it (compaction = rewrite the resolved frame and drop old dirs)."""
-    # expand concrete batch dirs (a `batch=*` glob makes the reader
-    # probe a literal glob path for file-sink metadata -> noisy WARN)
-    import glob as _glob
-    import os as _os
-
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* directories under {path}")
-    df = spark.read.option("basePath", path).parquet(*dirs)
+    df = _read_batches(spark, path)
     keys = list(keys)
     value_cols = [c for c in df.columns if c not in keys and c != "batch"]
     resolved = df.groupBy(*keys).agg(
@@ -137,19 +177,11 @@ def compact_upserted(spark: SparkSession, path: str, keys: Sequence[str]) -> int
     so ``read_upserted`` returns identical rows whether the old dirs
     are gone yet or not. Returns the new batch id. (On a real cluster
     the delete is a fs/objectstore call; same two-step shape.)"""
-    import glob as _glob
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-
-    dirs = sorted(_glob.glob(_os.path.join(path, "batch=*")))
+    dirs = _batch_dirs(path)
     if len(dirs) <= 1:
         return -1
-    ids = [int(_re.search(r"batch=(\d+)$", d).group(1)) for d in dirs]
-    new_id = max(ids) + 1
-    read_upserted(spark, path, keys).write.mode("overwrite").parquet(
-        f"{path}/batch={new_id}"
-    )
+    new_id = max(int(re.search(r"batch=(\d+)$", d).group(1)) for d in dirs) + 1
+    _write_batch(read_upserted(spark, path, keys), path, new_id)
     for d in dirs:
-        _shutil.rmtree(d)
+        shutil.rmtree(d)
     return new_id

@@ -326,3 +326,22 @@ def test_overwrite_partitions_leaves_others_untouched(spark, tmp_path):
 
     got = {(r["d"], r["v"]) for r in spark.read.parquet(path).collect()}
     assert got == {("a", 1), ("a", 2), ("b", 99), ("c", 4)}
+
+
+def test_read_parquet_nanos_by_file_then_directory(spark, tmp_path):
+    """Parquet TIMESTAMP(NANOS) columns come back as microsecond
+    timestamps whether the path names the file or its directory, read
+    in that order in one session: the file read leaves nanosAsLong on,
+    so a directory read that missed the column would return raw int64
+    nanos."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "nanos"
+    d.mkdir()
+    ts = pa.array([1577836800123456789], type=pa.timestamp("ns"))
+    pq.write_table(pa.table({"id": [1], "ts": ts}), str(d / "part-0.parquet"))
+    want = pd.Timestamp("2020-01-01 00:00:00.123456")
+    for path in (d / "part-0.parquet", d):
+        got = es.read_parquet(spark, str(path), index_col="id").to_pandas()
+        assert got["ts"].iloc[0] == want, (path, got.dtypes)

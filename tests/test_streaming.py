@@ -1320,3 +1320,19 @@ def test_stream_kaplan_meier_matches_batch(spark, tmp_path):
     )
     want = want[got.columns]
     assert got.equals(want), (got, want)
+
+
+def test_batch_store_format_has_one_writer_and_one_reader():
+    """Every merge-on-read store (sketches, counts, upserts) shares the
+    ``<path>/batch=<id>/`` layout through one writer and one reader in
+    streaming/sinks.py: the per-batch path and the batch-dir glob are
+    each spelled exactly once in the streaming package."""
+    from pathlib import Path
+
+    import eland_spark.streaming as streaming
+
+    src = "".join(
+        p.read_text() for p in sorted(Path(streaming.__file__).parent.glob("*.py"))
+    )
+    assert src.count("batch={batch_id}") == 1
+    assert src.count('"batch=*"') == 1
