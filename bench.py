@@ -36,6 +36,8 @@ import subprocess
 import sys
 import time
 
+from perfbench.harness import read_steal
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.abspath(__file__))
 FULL_OUT = os.path.join(REPO, "BENCH_FULL.json")
@@ -336,18 +338,9 @@ _STEAL_OK_PCT = 2.0
 _STEAL_RETRIES = 3
 
 
-def _cpu_stat() -> "tuple[int, int]":
-    try:
-        with open("/proc/stat") as f:
-            vals = list(map(int, f.readline().split()[1:]))
-        return (vals[7] if len(vals) > 7 else 0), sum(vals)
-    except (OSError, ValueError, IndexError):
-        return 0, 0
-
-
 def _steal_pct(before: "tuple[int, int]") -> float:
     s0, t0 = before
-    s1, t1 = _cpu_stat()
+    s1, t1 = read_steal()
     if t1 <= t0:
         return 0.0
     return round(100.0 * (s1 - s0) / (t1 - t0), 2)
@@ -436,7 +429,7 @@ def main() -> None:
         clean_seen = False
         attempts = 0
         while attempts < RUNS + _STEAL_RETRIES:
-            c0 = _cpu_stat()
+            c0 = read_steal()
             dt = _run_once(fn, name, spark, collect_small=True)
             st = _steal_pct(c0)
             attempts += 1
@@ -493,13 +486,13 @@ def main() -> None:
         for name, fn in sorted(queries.items()):
             if name in timings:
                 continue
-            c0 = _cpu_stat()
+            c0 = read_steal()
             dt = _run_once(fn, name, spark, collect_small=False)
             st = _steal_pct(c0)
             clean = st <= _STEAL_OK_PCT
             if dt > budget or not clean:
                 for _ in range(_STEAL_RETRIES):
-                    c0 = _cpu_stat()
+                    c0 = read_steal()
                     dt = min(dt, _run_once(fn, name, spark, collect_small=False))
                     st = _steal_pct(c0)
                     clean = clean or st <= _STEAL_OK_PCT

@@ -15,6 +15,8 @@ has no implicit row order, so each frame carries explicit index columns
 
 from __future__ import annotations
 
+import functools
+import operator
 from typing import Any, Iterable
 
 import numpy as np
@@ -34,6 +36,71 @@ __all__ = ["DataFrame"]
 # driver-fold as-of path (see _reindex_rows_fold); larger lists keep the
 # windowless global-fill bucket plan (unbounded-safe).
 _REINDEX_FOLD_MAX = 1024
+
+
+def _key_join(
+    left: SparkDataFrame,
+    right: SparkDataFrame,
+    keys: list[str],
+    how: str = "inner",
+    right_keys: "list[str] | None" = None,
+    broadcast: bool = False,
+) -> SparkDataFrame:
+    """The one label join behind every two-frame op (merge, concat(axis=1),
+    merge_ordered, compare, combine_first, align, reindex, update,
+    corrwith). Keys match NULL-SAFE, like pandas: a NaN label aligns with
+    a NaN label, where a bare Spark join drops every null-keyed match.
+    EqualNullSafe is still an equi-join key to Catalyst, so the plan
+    stays a hash or sort-merge join.
+
+    With ``right_keys`` each side keeps its own key columns (pandas
+    ``left_on``/``right_on``). Without it both sides key on ``keys`` and
+    the result holds ONE column per key under its left name: the left
+    value, or right's on right-only rows."""
+    tmp = {k: f"__r_{k}__" for k in keys}
+    if right_keys is None:
+        right = right.withColumnsRenamed(tmp)
+    if broadcast:
+        right = F.broadcast(right)
+    rkeys = list(tmp.values()) if right_keys is None else right_keys
+    cond = [left[a].eqNullSafe(right[b]) for a, b in zip(keys, rkeys)]
+    joined = left.join(right, cond, how)
+    kind = how.lower().replace("_", "")
+    if right_keys is not None or kind in ("semi", "leftsemi", "anti", "leftanti"):
+        return joined
+    if kind not in ("inner", "left", "leftouter"):
+        # outer/right joins: a right-only row's key is on the right side
+        joined = joined.withColumns(
+            {k: F.coalesce(F.col(k), F.col(t)) for k, t in tmp.items()}
+        )
+    return joined.drop(*tmp.values())
+
+
+def _conform_rows(
+    labels: SparkDataFrame,
+    sdf: SparkDataFrame,
+    keys: list[str],
+    value_cols: list[str],
+    fill_value,
+) -> SparkDataFrame:
+    """Conform ``sdf``'s rows to the label frame ``labels`` (columns
+    ``keys``) with one null-safe left key join: every label keeps its
+    matching rows, and a label ``sdf`` lacks gets a null row, or
+    ``fill_value`` cast to each column's type (divergence: pandas drops
+    a numeric fill into object columns untouched; a lazy plan needs one
+    type per column). Nulls already in ``sdf`` survive, like pandas
+    ``reindex`` and ``align``."""
+    vtypes = {f.name: f.dataType for f in sdf.schema.fields}
+    j = _key_join(labels, sdf.withColumn("__hit__", F.lit(1)), keys, "left")
+    sel = [F.col(k) for k in keys]
+    for c in value_cols:
+        e = F.col(c)
+        if fill_value is not None:
+            e = F.when(
+                F.col("__hit__").isNull(), F.lit(fill_value).cast(vtypes[c])
+            ).otherwise(e)
+        sel.append(e.alias(c))
+    return j.select(*sel)
 
 
 class DataFrame:
@@ -183,6 +250,22 @@ class DataFrame:
         shadowed by a display name, then every display name."""
         shown = self._schema.display_names
         return [c for c in self._schema.index_cols if c not in shown] + shown
+
+    def _aligned_index(self, other: "DataFrame", op: str) -> list[str]:
+        """The index columns a label-aligned two-frame op joins on; both
+        frames must be indexed on the same columns."""
+        icols = list(self._schema.index_cols)
+        if not icols or tuple(icols) != tuple(other._schema.index_cols):
+            raise ValueError(f"{op} needs both frames indexed on the same columns")
+        return icols
+
+    def _keyed(self, icols: list[str], cols: list[str], name: str = "{}"):
+        """One side of a label join: the index columns under their own
+        names plus ``cols`` renamed by the ``name`` pattern."""
+        return self._sdf.select(
+            *[F.col(self._schema.resolve_any(c)).alias(c) for c in icols],
+            *[F.col(self._schema.resolve(c)).alias(name.format(c)) for c in cols],
+        )
 
     # ------------------------------------------------------------------
     # column ops (reference eland/dataframe.py:329-468,1184-1272,2078-2151)
@@ -1325,67 +1408,59 @@ class DataFrame:
         """pandas ``DataFrame.compare``: rows where any shared column
         differs, emitting ``<col>_self`` / ``<col>_other`` pairs (flat
         columns instead of pandas' MultiIndex — Spark has no column
-        MultiIndex). One index-equi-join; null==null counts as equal
-        (pandas semantics via null-safe equality)."""
-        icols = list(self.index_cols)
-        if not icols or tuple(icols) != tuple(other.index_cols):
-            raise ValueError("compare needs both frames indexed identically")
+        MultiIndex). One null-safe index equi-join (:func:`_key_join`),
+        so NaN labels align as they do in pandas; null==null cells count
+        as equal (pandas semantics via null-safe equality)."""
+        icols = self._aligned_index(other, "compare")
         shared = [
             c for c in self._schema.display_names
             if c in other._schema and c not in icols
         ]
         if not shared:
             raise ValueError("no shared columns to compare")
-        lsel = [F.col(self._schema.resolve_any(c)).alias(c) for c in icols] + [
-            F.col(self._schema.resolve(c)).alias(f"{c}_self") for c in shared
-        ]
-        rsel = [F.col(other._schema.resolve_any(c)).alias(c) for c in icols] + [
-            F.col(other._schema.resolve(c)).alias(f"{c}_other") for c in shared
-        ]
-        j = self._sdf.select(*lsel).join(other._sdf.select(*rsel), on=icols)
-        any_diff = None
-        for c in shared:
-            d = ~F.col(f"{c}_self").eqNullSafe(F.col(f"{c}_other"))
-            any_diff = d if any_diff is None else (any_diff | d)
+        j = _key_join(
+            self._keyed(icols, shared, "{}_self"),
+            other._keyed(icols, shared, "{}_other"),
+            icols,
+        )
+        diff = {
+            c: ~F.col(f"{c}_self").eqNullSafe(F.col(f"{c}_other"))
+            for c in shared
+        }
         out_cols = [F.col(c) for c in icols]
-        for c in shared:
-            eq = F.col(f"{c}_self").eqNullSafe(F.col(f"{c}_other"))
+        for c, d in diff.items():
             # pandas masks equal cells with NaN in both columns
-            out_cols.append(F.when(~eq, F.col(f"{c}_self")).alias(f"{c}_self"))
-            out_cols.append(F.when(~eq, F.col(f"{c}_other")).alias(f"{c}_other"))
+            out_cols += [
+                F.when(d, F.col(f"{c}_{s}")).alias(f"{c}_{s}")
+                for s in ("self", "other")
+            ]
+        any_diff = functools.reduce(operator.or_, diff.values())
         return DataFrame(
             j.filter(any_diff).select(*out_cols), index_cols=tuple(icols)
         )
 
     def combine_first(self, other: "DataFrame") -> "DataFrame":
         """pandas ``DataFrame.combine_first``: patch nulls (and missing
-        rows) in ``self`` with ``other`` — ONE full-outer index join +
-        per-column coalesce; the union of rows and columns like
-        pandas."""
-        icols = list(self.index_cols)
-        if not icols or tuple(icols) != tuple(other.index_cols):
-            raise ValueError("combine_first needs both frames indexed identically")
+        rows) in ``self`` with ``other`` — ONE full-outer null-safe index
+        join (:func:`_key_join`, so NaN labels align as they do in
+        pandas) + per-column coalesce; the union of rows and columns
+        like pandas."""
+        icols = self._aligned_index(other, "combine_first")
         mine = [c for c in self._schema.display_names if c not in icols]
         theirs = [c for c in other._schema.display_names if c not in icols]
-        all_cols = list(dict.fromkeys(mine + theirs))
-        lsel = [F.col(self._schema.resolve_any(c)).alias(c) for c in icols] + [
-            F.col(self._schema.resolve(c)).alias(f"__l_{c}") for c in mine
-        ]
-        rsel = [F.col(other._schema.resolve_any(c)).alias(c) for c in icols] + [
-            F.col(other._schema.resolve(c)).alias(f"__r_{c}") for c in theirs
-        ]
-        j = self._sdf.select(*lsel).join(
-            other._sdf.select(*rsel), on=icols, how="full_outer"
+        j = _key_join(
+            self._keyed(icols, mine, "__l_{}"),
+            other._keyed(icols, theirs, "__r_{}"),
+            icols,
+            "full",
         )
         out_cols = [F.col(c) for c in icols]
-        for c in all_cols:
-            if c in mine and c in theirs:
-                e = F.coalesce(F.col(f"__l_{c}"), F.col(f"__r_{c}"))
-            elif c in mine:
-                e = F.col(f"__l_{c}")
-            else:
-                e = F.col(f"__r_{c}")
-            out_cols.append(e.alias(c))
+        for c in dict.fromkeys(mine + theirs):
+            sides = [
+                f"__{s}_{c}" for s, cols in (("l", mine), ("r", theirs))
+                if c in cols
+            ]
+            out_cols.append(F.coalesce(*sides).alias(c))
         return DataFrame(j.select(*out_cols), index_cols=tuple(icols))
 
     def reindex(
@@ -1444,7 +1519,10 @@ class DataFrame:
 
         def _py(v):
             # createDataFrame's NTZ/long verifiers reject pandas/numpy
-            # scalars — normalize to plain Python objects
+            # scalars — normalize to plain Python objects; a NaN label is
+            # the null key, as every ingest path stores it
+            if v is pd.NaT or (isinstance(v, float) and v != v):
+                return None
             if hasattr(v, "to_pydatetime"):
                 return v.to_pydatetime()
             if hasattr(v, "item") and type(v).__module__ == "numpy":
@@ -1517,27 +1595,9 @@ class DataFrame:
                 ),
                 index_cols=(ic,),
             )
-        lbl = tgt.select(F.col(ic).alias("__lbl__"))
-        hit = proj.withColumn("__hit__", F.lit(1))
-        joined = lbl.join(
-            hit, F.col("__lbl__").eqNullSafe(F.col(ic)), "left"
+        return DataFrame(
+            _conform_rows(tgt, proj, [ic], vals, fill_value), index_cols=(ic,)
         )
-        vtypes = {f.name: f.dataType for f in proj.schema.fields}
-        sel = [F.col("__lbl__").alias(ic)]
-        for c in vals:
-            e = F.col(c)
-            if fill_value is not None:
-                # only newly-introduced cells (missing labels) fill;
-                # nulls already in the frame survive, like pandas. The
-                # fill is CAST to each column's type (divergence:
-                # pandas drops a numeric fill into object columns
-                # untouched; a lazy plan needs one type per column)
-                e = F.when(
-                    F.col("__hit__").isNull(),
-                    F.lit(fill_value).cast(vtypes[c]),
-                ).otherwise(e)
-            sel.append(e.alias(c))
-        return DataFrame(joined.select(*sel), index_cols=(ic,))
 
     def _reindex_rows_fold(
         self, proj, ic: str, vals: list, pyl: list, method
@@ -1653,8 +1713,9 @@ class DataFrame:
         Rows (``axis`` None or 0): the shared key set is built
         ENGINE-SIDE from the two index-column sets (union distinct /
         intersect / one side, per ``join``) — never a driver collect —
-        then each side is one left join of the key frame onto its rows.
-        Columns (``axis`` None or 1): union (sorted, pandas
+        then each side is one null-safe left join of the key frame onto
+        its rows (:func:`_conform_rows`), so NaN labels align as they do
+        in pandas. Columns (``axis`` None or 1): union (sorted, pandas
         ``Index.union`` convention) or intersection of display names;
         columns missing on a side materialize as nulls (or
         ``fill_value``). Divergence: duplicate index labels fan out
@@ -1663,9 +1724,7 @@ class DataFrame:
             raise ValueError(f"join must be outer/inner/left/right, got {join!r}")
         if axis not in (None, 0, 1):
             raise ValueError("axis must be None, 0, or 1")
-        icols = list(self.index_cols)
-        if not icols or tuple(icols) != tuple(other.index_cols):
-            raise ValueError("align needs both frames indexed identically")
+        icols = self._aligned_index(other, "align")
 
         lcols = [c for c in self._schema.display_names if c not in icols]
         rcols = [c for c in other._schema.display_names if c not in icols]
@@ -1683,25 +1742,8 @@ class DataFrame:
                 cols = rcols
             lcols_out = rcols_out = cols
 
-        def _proj(frame, value_cols):
-            sel = [
-                F.col(frame._schema.resolve_any(c)).alias(c) for c in icols
-            ]
-            have = set(frame._schema.display_names)
-            for c in value_cols:
-                if c in have:
-                    sel.append(F.col(frame._schema.resolve(c)).alias(c))
-                else:
-                    e = (
-                        F.lit(fill_value)
-                        if fill_value is not None
-                        else F.lit(None).cast("double")
-                    )
-                    sel.append(e.alias(c))
-            return frame._sdf.select(*sel)
-
-        lsdf, rsdf = _proj(self, lcols_out), _proj(other, rcols_out)
-
+        lsdf = self._reindex_columns(lcols_out, fill_value)._sdf
+        rsdf = other._reindex_columns(rcols_out, fill_value)._sdf
         if axis in (None, 0):
             lk = lsdf.select(*icols)
             rk = rsdf.select(*icols)
@@ -1713,24 +1755,8 @@ class DataFrame:
                 keys = lk.distinct()
             else:
                 keys = rk.distinct()
-
-            def _conform(sdf, value_cols):
-                hit = sdf.withColumn("__hit__", F.lit(1))
-                vtypes = {f.name: f.dataType for f in sdf.schema.fields}
-                j = keys.join(hit, icols, "left")
-                sel = [F.col(c) for c in icols]
-                for c in value_cols:
-                    e = F.col(c)
-                    if fill_value is not None:
-                        e = F.when(
-                            F.col("__hit__").isNull(),
-                            F.lit(fill_value).cast(vtypes[c]),
-                        ).otherwise(e)
-                    sel.append(e.alias(c))
-                return j.select(*sel)
-
-            lsdf = _conform(lsdf, lcols_out)
-            rsdf = _conform(rsdf, rcols_out)
+            lsdf = _conform_rows(keys, lsdf, icols, lcols_out, fill_value)
+            rsdf = _conform_rows(keys, rsdf, icols, rcols_out, fill_value)
         return (
             DataFrame(lsdf, index_cols=tuple(icols)),
             DataFrame(rsdf, index_cols=tuple(icols)),
@@ -2564,36 +2590,27 @@ class DataFrame:
     def corrwith(self, other: "DataFrame", numeric_only: bool = True) -> pd.Series:
         """Pearson correlation of each shared numeric column between
         two index-aligned frames (pandas ``DataFrame.corrwith``,
-        axis=0). One null-safe index equi-join + ONE aggregation pass
-        (every F.corr is a map-side-combinable streaming agg) — a
-        single scan of each side at any scale; the result is
-        column-count sized."""
-        if self._schema.index_cols != other._schema.index_cols or not self._schema.index_cols:
-            raise ValueError(
-                "corrwith needs both frames indexed on the same columns"
-            )
-        mine = {f.display_name: f for f in self._schema.fields if f.is_numeric}
-        theirs = {f.display_name: f for f in other._schema.fields if f.is_numeric}
-        idx = list(self._schema.index_cols)
-        shared = [c for c in mine if c in theirs and c not in idx]
+        axis=0). One null-safe index equi-join (:func:`_key_join`) +
+        ONE aggregation pass (every F.corr is a map-side-combinable
+        streaming agg) — a single scan of each side at any scale; the
+        result is column-count sized."""
+        icols = self._aligned_index(other, "corrwith")
+        theirs = {f.display_name for f in other._schema.fields if f.is_numeric}
+        shared = [
+            f.display_name for f in self._schema.fields
+            if f.is_numeric and f.display_name in theirs
+            and f.display_name not in icols
+        ]
         if not shared:
             return pd.Series(dtype="float64")
-        l = self._sdf.select(
-            *[F.col(self._schema.resolve(c)).alias(f"__i{j}__")
-              for j, c in enumerate(idx)],
-            *[F.col(mine[c].column_name).cast("double").alias(f"__l_{c}__")
-              for c in shared],
+        joined = _key_join(
+            self._keyed(icols, shared, "__l_{}__"),
+            other._keyed(icols, shared, "__r_{}__"),
+            icols,
         )
-        r = other._sdf.select(
-            *[F.col(other._schema.resolve(c)).alias(f"__i{j}__")
-              for j, c in enumerate(idx)],
-            *[F.col(theirs[c].column_name).cast("double").alias(f"__r_{c}__")
-              for c in shared],
-        )
-        cond = [l[f"__i{j}__"].eqNullSafe(r[f"__i{j}__"]) for j in range(len(idx))]
-        joined = l.join(r, cond, "inner")
         row = joined.agg(
-            *[F.corr(F.col(f"__l_{c}__"), F.col(f"__r_{c}__")).alias(c)
+            *[F.corr(F.col(f"__l_{c}__").cast("double"),
+                     F.col(f"__r_{c}__").cast("double")).alias(c)
               for c in shared]
         ).collect()[0]
         return pd.Series(
@@ -2611,28 +2628,25 @@ class DataFrame:
         other's NON-NULL values (``overwrite=True``) or only fill
         self's nulls (``overwrite=False``). Always a LEFT alignment —
         every self row survives, other-only rows are ignored. One
-        null-safe index equi-join, no other shuffle; pandas raises on
-        duplicate other-side keys, here they fan out (documented
-        divergence of the lazy plan) — dedup upstream if unsure."""
-        if self._schema.index_cols != other._schema.index_cols or not self._schema.index_cols:
-            raise ValueError("update needs both frames indexed on the same columns")
-        idx = list(self._schema.index_cols)
-        mine = {f.display_name: f for f in self._schema.fields}
-        theirs = {f.display_name: f for f in other._schema.fields}
-        shared = [c for c in mine if c in theirs and c not in idx]
+        null-safe index equi-join (:func:`_key_join`), no other shuffle;
+        pandas raises on duplicate other-side keys, here they fan out
+        (documented divergence of the lazy plan) — dedup upstream if
+        unsure."""
+        icols = self._aligned_index(other, "update")
+        shared = [
+            c for c in self._schema.display_names
+            if c in other._schema and c not in icols
+        ]
         if not shared:
             return self.copy()
+        keys = [self._schema.resolve_any(c) for c in icols]
         r = other._sdf.select(
-            *[F.col(other._schema.resolve(c)).alias(f"__ui{j}__")
-              for j, c in enumerate(idx)],
-            *[F.col(theirs[c].column_name).alias(f"__u_{c}__") for c in shared],
+            *[F.col(other._schema.resolve_any(c)).alias(k)
+              for c, k in zip(icols, keys)],
+            *[F.col(other._schema.resolve(c)).alias(f"__u_{c}__")
+              for c in shared],
         )
-        l = self._sdf
-        cond = None
-        for j, c in enumerate(idx):
-            e = F.col(self._schema.resolve(c)).eqNullSafe(F.col(f"__ui{j}__"))
-            cond = e if cond is None else (cond & e)
-        joined = l.join(r, cond, "left")
+        joined = _key_join(self._sdf, r, keys, "left")
         cols = []
         for f in self._schema.fields:
             c = f.display_name
@@ -3034,21 +3048,24 @@ class DataFrame:
         caught up front costs two scalar jobs; undetected it corrupts
         every downstream row count).
 
-        Key matching is NULL-SAFE, like pandas: NaN keys join to NaN
-        keys (pandas merges NaN with NaN; a bare Spark join silently
-        drops every null-keyed match). EqualNullSafe is still an
-        equi-join predicate to Catalyst, so the plan stays a
+        Key matching is NULL-SAFE (:func:`_key_join`), like pandas: NaN
+        keys join to NaN keys (pandas merges NaN with NaN; a bare Spark
+        join silently drops every null-keyed match). EqualNullSafe is
+        still an equi-join predicate to Catalyst, so the plan stays a
         hash/sort-merge join — pandas semantics at zero scale cost."""
+
+        def _keys(k):
+            return [k] if isinstance(k, str) else list(k)
+
+        lk = _keys(on if on is not None else left_on)
+        # right_on keys; None = both sides key on `on`
+        rk = None if on is not None else _keys(right_on)
         if validate is not None:
             norm = {"one_to_one": "1:1", "one_to_many": "1:m",
                     "many_to_one": "m:1", "many_to_many": "m:m"}
             v = norm.get(validate, validate)
             if v not in ("1:1", "1:m", "m:1", "m:m"):
                 raise ValueError(f"invalid validate {validate!r}")
-            lk = ([on] if isinstance(on, str) else list(on)) if on is not None \
-                else ([left_on] if isinstance(left_on, str) else list(left_on))
-            rk = ([on] if isinstance(on, str) else list(on)) if on is not None \
-                else ([right_on] if isinstance(right_on, str) else list(right_on))
 
             def _unique(frame, keys, side):
                 sdf = frame._projected()
@@ -3067,38 +3084,14 @@ class DataFrame:
             if v in ("1:1", "1:m"):
                 _unique(self, lk, "left")
             if v in ("1:1", "m:1"):
-                _unique(right, rk, "right")
+                _unique(right, rk or lk, "right")
         lsdf = self._projected()
         rsdf = right._projected()
         ind_col = "_merge" if indicator is True else indicator
         if indicator:
             lsdf = lsdf.withColumn("__l__", F.lit(1))
             rsdf = rsdf.withColumn("__r__", F.lit(1))
-        if on is not None:
-            on_cols = [on] if isinstance(on, str) else list(on)
-            # rename right's key columns so the null-safe condition is
-            # unambiguous, then fold back to ONE key column (left value,
-            # right's for right-only rows) like Spark's name-join and
-            # pandas both do
-            tmpmap = {c: f"__r_{c}__" for c in on_cols}
-            for c, t in tmpmap.items():
-                rsdf = rsdf.withColumnRenamed(c, t)
-            if broadcast:
-                rsdf = F.broadcast(rsdf)
-            cond = [lsdf[c].eqNullSafe(rsdf[t]) for c, t in tmpmap.items()]
-            joined = lsdf.join(rsdf, on=cond, how=how)
-            if how not in ("semi", "left_semi", "leftsemi", "anti", "left_anti", "leftanti"):
-                for c, t in tmpmap.items():
-                    joined = joined.withColumn(
-                        c, F.coalesce(F.col(c), F.col(t))
-                    ).drop(t)
-        else:
-            if broadcast:
-                rsdf = F.broadcast(rsdf)
-            lo = [left_on] if isinstance(left_on, str) else list(left_on)
-            ro = [right_on] if isinstance(right_on, str) else list(right_on)
-            cond = [lsdf[a].eqNullSafe(rsdf[b]) for a, b in zip(lo, ro)]
-            joined = lsdf.join(rsdf, on=cond, how=how)
+        joined = _key_join(lsdf, rsdf, lk, how, right_keys=rk, broadcast=broadcast)
         if indicator:
             joined = joined.withColumn(
                 ind_col,
@@ -3544,24 +3537,10 @@ def _concat_axis1(frames: list["DataFrame"], join: str = "outer") -> "DataFrame"
             if tgt != c:
                 data_renames[c] = tgt
             seen.add(tgt)
-        for old, new in data_renames.items():
-            p = p.withColumnRenamed(old, new)
-        for old, new in zip(f._schema.index_cols, idx):
-            if old != new:
-                p = p.withColumnRenamed(old, new)
-        l, r = out.alias("__l"), p.alias("__r")
-        cond = None
-        for k in idx:
-            # null-safe: pandas aligns NaN index labels with each other
-            c = F.col(f"__l.{k}").eqNullSafe(F.col(f"__r.{k}"))
-            cond = c if cond is None else (cond & c)
-        keep = [
-            F.coalesce(F.col(f"__l.{k}"), F.col(f"__r.{k}")).alias(k)
-            for k in idx
-        ]
-        keep += [F.col(f"__l.{c}") for c in out.columns if c not in idx]
-        keep += [F.col(f"__r.{c}") for c in p.columns if c not in idx]
-        out = l.join(r, cond, how).select(*keep)
+        p = p.withColumnsRenamed(data_renames).withColumnsRenamed(
+            dict(zip(f._schema.index_cols, idx))
+        )
+        out = _key_join(out, p, list(idx), how)
     return DataFrame(out, index_cols=tuple(idx))
 
 
@@ -3596,25 +3575,12 @@ def merge_ordered(
     rsdf = right._projected()
     # disambiguate non-key collisions like pandas (suffixes)
     shared = (set(lsdf.columns) & set(rsdf.columns)) - {on} - set(by)
-    for c in shared:
-        lsdf = lsdf.withColumnRenamed(c, f"{c}{suffixes[0]}")
-        rsdf = rsdf.withColumnRenamed(c, f"{c}{suffixes[1]}")
+    lsdf = lsdf.withColumnsRenamed({c: f"{c}{suffixes[0]}" for c in shared})
+    rsdf = rsdf.withColumnsRenamed({c: f"{c}{suffixes[1]}" for c in shared})
     if by:
-        groups = lsdf.select(*by).distinct()
-        rsdf = rsdf.join(F.broadcast(groups))
+        rsdf = rsdf.crossJoin(F.broadcast(lsdf.select(*by).distinct()))
     keys = [*by, on]
-    cond = None
-    l, r = lsdf.alias("__l"), rsdf.alias("__r")
-    for k in keys:
-        c = F.col(f"__l.{k}").eqNullSafe(F.col(f"__r.{k}"))
-        cond = c if cond is None else (cond & c)
-    folded = [
-        F.coalesce(F.col(f"__l.{k}"), F.col(f"__r.{k}")).alias(k)
-        for k in keys
-    ]
-    lcols = [F.col(f"__l.{c}") for c in lsdf.columns if c not in keys]
-    rcols = [F.col(f"__r.{c}") for c in rsdf.columns if c not in keys]
-    out = l.join(r, cond, "full").select(*folded, *lcols, *rcols)
+    out = _key_join(lsdf, rsdf, keys, "full")
     if fill_method == "ffill":
         from pyspark.sql import Window as _W
 
@@ -3623,10 +3589,11 @@ def merge_ordered(
             .orderBy(on)
             .rowsBetween(_W.unboundedPreceding, _W.currentRow)
         )
-        for c in out.columns:
-            if c in keys:
-                continue
-            out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
+        # one projection: every fill column shares one Window node
+        out = out.withColumns({
+            c: F.last(c, ignorenulls=True).over(w)
+            for c in out.columns if c not in keys
+        })
     return DataFrame(out, index_cols=tuple(keys))
 
 

@@ -111,42 +111,7 @@ def connected_components(
     if driver_fold_max_edges:
         head = e0.limit(int(driver_fold_max_edges) + 1).collect()
         if len(head) <= driver_fold_max_edges:
-            parent: dict = {}
-
-            def _find0(x):
-                root = x
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(x, x) != x:
-                    parent[x], x = root, parent[x]
-                return root
-
-            seen = set()
-            for r in head:
-                u, v = r[0], r[1]
-                seen.add(u)
-                seen.add(v)
-                if u == v:
-                    continue
-                ru, rv = _find0(u), _find0(v)
-                if ru != rv:
-                    lo, hi = (ru, rv) if ru < rv else (rv, ru)
-                    parent[hi] = lo
-            labels = sorted((n, _find0(n)) for n in seen)
-            # broadcast hint: the local frame has no stats (LogicalRDD
-            # defaults to a huge size estimate), so a downstream
-            # corpus join would pick sort-merge and shuffle the corpus;
-            # the frame is bounded by driver_fold_max_edges (<= a few
-            # MB), always broadcast-safe
-            return F.broadcast(
-                e0.sparkSession.createDataFrame(
-                    labels,
-                    schema=e0.select(
-                        F.col("u").alias("node"),
-                        F.col("v").alias("component"),
-                    ).schema,
-                )
-            )
+            return _label_frame(e0, _union_find_labels(head))
     nodes = (
         e0.select(F.col("u").alias("node"))
         .unionByName(e0.select(F.col("v").alias("node")))
@@ -205,50 +170,54 @@ def connected_components(
             # materialized — no recompute), labels = component min.
             # Identical to the loop's fixed point; skips the remaining
             # rounds' job waves.
-            rows = edges.collect()
-            parent: dict = {}
-
-            def _find(x):
-                root = x
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(x, x) != x:
-                    parent[x], x = root, parent[x]
-                return root
-
-            for r in rows:
-                ru, rv = _find(r["u"]), _find(r["v"])
-                if ru != rv:
-                    # union by MIN so every root is its component's min
-                    lo, hi = (ru, rv) if ru < rv else (rv, ru)
-                    parent[hi] = lo
-            labels = [(x, _find(x)) for x in parent]
-            if labels:
-                spark = edges.sparkSession
-                star = spark.createDataFrame(
-                    labels, schema=edges.select("u", "v").schema
-                ).select(
-                    F.col("u"), F.col("v").alias("component")
-                ).where(F.col("u") != F.col("component"))
-                star = F.broadcast(star)
-            else:
-                star = edges.groupBy("u").agg(
-                    F.min("v").alias("component")
-                )
-            return nodes.join(
-                star.withColumnRenamed("u", "node"), on="node", how="left"
-            ).select(
-                "node",
-                F.coalesce(F.col("component"), F.col("node")).alias(
-                    "component"
-                ),
-            )
+            labels = _label_frame(e0, _union_find_labels(edges.collect()))
+            return _label_nodes(nodes, labels)
     # fixed point = forest of stars (node -> component min); roots and
     # isolated nodes label themselves
     star = edges.groupBy("u").agg(F.min("v").alias("component"))
-    return nodes.join(
-        star.withColumnRenamed("u", "node"), on="node", how="left"
-    ).select(
+    return _label_nodes(nodes, star.withColumnRenamed("u", "node"))
+
+
+def _union_find_labels(edges) -> list[tuple]:
+    """Driver union-find over ``(u, v)`` rows, union by MIN so every
+    root is its component's min: sorted ``(node, component)`` pairs for
+    every node the edges touch (a self-loop labels its node)."""
+    parent: dict = {}
+
+    def _find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = _find(u), _find(v)
+        if ru != rv:
+            lo, hi = (ru, rv) if ru < rv else (rv, ru)
+            parent[hi] = lo
+    return sorted((x, _find(x)) for x in parent)
+
+
+def _label_frame(edges, labels: list[tuple]):
+    """A driver-built ``(node, component)`` frame typed like ``edges``'
+    ``(u, v)``. Broadcast hint: a local frame has no stats (LogicalRDD
+    defaults to a huge size estimate), so a downstream corpus join would
+    pick sort-merge and shuffle the corpus; the frame is bounded by
+    ``driver_fold_max_edges`` (<= a few MB), always broadcast-safe."""
+    schema = edges.select(
+        F.col("u").alias("node"), F.col("v").alias("component")
+    ).schema
+    return F.broadcast(edges.sparkSession.createDataFrame(labels, schema=schema))
+
+
+def _label_nodes(nodes, labels):
+    """Label every node; a node ``labels`` lacks is its own component
+    (a root or an isolated node)."""
+    return nodes.join(labels, on="node", how="left").select(
         "node", F.coalesce(F.col("component"), F.col("node")).alias("component")
     )
 

@@ -7,7 +7,8 @@ the column). This operator computes exact interpolated percentiles the
 scalable way: range-partition sort + per-partition offsets + a global
 rank filter. Everything heavy stays codegen'd and parallel; only the
 ``len(ps) * 2`` boundary rows and the 1-row-per-partition count table
-ever reach the driver. Global ranks come from the bit layout of
+ever reach the driver. Global ranks come from the shared rank pass
+(``ranking._rank_pass``): the bit layout of
 ``monotonically_increasing_id`` on the sorted frame (pid << 33 | pos)
 — no window node at all.
 
@@ -22,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .._literals import map_lit
+from .ranking import _rank_pass
 
 __all__ = ["exact_percentiles", "weighted_quantiles"]
 
@@ -34,61 +35,35 @@ def exact_percentiles(
 
     Returns one float per p in ``ps`` (NaN-free: nulls are dropped
     first; returns [] values as ``float('nan')`` when the column is
-    empty)."""
+    empty). The global ranks come from the shared rank pass
+    (:func:`ranking._rank_pass`); its cache pin is released here."""
     c = F.col(col) if isinstance(col, str) else col
     vals = sdf.select(c.cast("double").alias("v")).filter(F.col("v").isNotNull())
-    n_parts = partitions or sdf.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    vals = vals.repartitionByRange(int(n_parts), F.col("v")).sortWithinPartitions("v")
-    # monotonically_increasing_id on the sorted, cached frame encodes
-    # (partition_id << 33) | row_in_partition — recovering the global
-    # rank with bit arithmetic needs NO window and NO extra exchange
-    # (a pid-window would re-shuffle on pid; this is a pure map)
-    vals = vals.withColumn("__mid__", F.monotonically_increasing_id()).cache()
+    src, _pid, _stats, _off, n, rank = _rank_pass(vals, ["v"], partitions)
     try:
-        # per-partition counts -> driver-side cumulative offsets (tiny)
-        part_counts = (
-            vals.groupBy(F.shiftright(F.col("__mid__"), 33).alias("__pid__"))
-            .count()
-            .orderBy("__pid__")
-            .collect()
-        )
-        if not part_counts:
+        if not n:
             return [float("nan")] * len(ps)
-        n = sum(r["count"] for r in part_counts)
-        offsets: dict[int, int] = {}
-        acc = 0
-        for r in part_counts:
-            offsets[r["__pid__"]] = acc
-            acc += r["count"]
-
-        # global positions needed: floor/ceil of p*(n-1)
+        # 1-based global ranks needed: floor/ceil of p*(n-1), plus one
         want: set[int] = set()
         pos = []
         for p in ps:
             x = p * (n - 1)
             lo, hi = int(x), min(int(x) + 1, n - 1)
             pos.append((x, lo, hi))
-            want.update((lo, hi))
-
-        off_map = map_lit(offsets, "bigint", "bigint")
-        ranked = vals.withColumn(
-            "__rank__",
-            off_map[F.shiftright(F.col("__mid__"), 33)]
-            + F.col("__mid__").bitwiseAND(F.lit((1 << 33) - 1)),
-        )
+            want.update((lo + 1, hi + 1))
         rows = (
-            ranked.filter(F.col("__rank__").isin(list(want)))
-            .select("__rank__", "v")
+            src.select(rank.alias("__rank__"), "v")
+            .filter(F.col("__rank__").isin(list(want)))
             .collect()
         )
-        by_rank = {r["__rank__"]: r["v"] for r in rows}
+        by_rank = {r["__rank__"] - 1: r["v"] for r in rows}
         out = []
         for x, lo, hi in pos:
             vlo, vhi = by_rank[lo], by_rank[hi]
             out.append(vlo + (x - lo) * (vhi - vlo))
         return out
     finally:
-        vals.unpersist()
+        src.unpersist()
 
 
 def weighted_quantiles(

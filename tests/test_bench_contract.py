@@ -164,5 +164,5 @@ def test_steal_pct_handles_missing_procfs():
     """_steal_pct must degrade to 0.0 (never raise) when /proc/stat is
     unavailable or time did not advance."""
     assert bench._steal_pct((0, 0)) >= 0.0
-    assert bench._steal_pct(bench._cpu_stat()) >= 0.0
+    assert bench._steal_pct(bench.read_steal()) >= 0.0
     assert bench._steal_pct((10**18, 10**18)) == 0.0

@@ -17,6 +17,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
+import eland_spark as es
+
 from eland_spark.frame import DataFrame as EDF
 
 
@@ -168,3 +170,148 @@ def test_merge_semi_anti_still_work(spark):
     assert sorted(semi["x"].tolist()) == [2, 3]
     anti = el.merge(er, on="k", how="left_anti").to_pandas()
     assert anti["x"].tolist() == [1]
+
+
+# Two frames whose index holds a NaN label (the null key in Spark): rows
+# 1.0 and NaN are shared, 3.0 is left-only and 4.0 right-only, and the
+# NaN row's `x` differs between the sides.
+_NAN_IDX_L = pd.DataFrame(
+    {"x": [1.0, 2.0, 3.0, 5.0], "y": [10.0, None, 30.0, 50.0]},
+    index=pd.Index([1.0, np.nan, 3.0, 5.0], name="k"),
+)
+_NAN_IDX_R = pd.DataFrame(
+    {"x": [1.5, 20.0, 4.0, 5.0], "z": [100.0, 200.0, 400.0, 500.0]},
+    index=pd.Index([1.0, np.nan, 4.0, 5.0], name="k"),
+)
+# identically labelled to _NAN_IDX_L, as pandas compare requires
+_NAN_IDX_C = pd.DataFrame(
+    {"x": [1.0, 20.0, 3.0, 6.0], "y": [10.0, None, 31.0, 50.0]},
+    index=_NAN_IDX_L.index,
+)
+
+
+def _pd_update(left, right, overwrite):
+    out = left.copy()
+    out.update(right, overwrite=overwrite)
+    return out
+
+
+def _flat_compare(left, right):
+    out = left.compare(right)
+    out.columns = [f"{c}_{side}" for c, side in out.columns]
+    return out
+
+
+_NAN_LABEL_OPS = {
+    "merge": (
+        lambda l, r, c: l.reset_index().merge(r[["z"]].reset_index(), on="k")
+        .set_index("k"),
+        lambda l, r, c: l.merge(r[["z"]], on="k"),
+    ),
+    "update_overwrite": (
+        lambda l, r, c: _pd_update(l, r, True),
+        lambda l, r, c: l.update(r, overwrite=True),
+    ),
+    "update_fill_only": (
+        lambda l, r, c: _pd_update(l, r, False),
+        lambda l, r, c: l.update(r, overwrite=False),
+    ),
+    "corrwith": (
+        # pandas also lists the unshared columns, as NaN
+        lambda l, r, c: pd.DataFrame([l.corrwith(r)[["x"]]]),
+        lambda l, r, c: pd.DataFrame([l.corrwith(r)]),
+    ),
+    "concat_axis1": (
+        lambda l, r, c: pd.concat([l, r[["z"]]], axis=1),
+        lambda l, r, c: es.concat([l, r[["z"]]], axis=1),
+    ),
+    "merge_ordered": (
+        lambda l, r, c: pd.merge_ordered(
+            l.reset_index(), r[["z"]].reset_index(), on="k"
+        ).set_index("k"),
+        lambda l, r, c: es.merge_ordered(l, r[["z"]], on="k"),
+    ),
+    "reindex": (
+        lambda l, r, c: l.reindex([np.nan, 3.0, 7.0]),
+        lambda l, r, c: l.reindex([np.nan, 3.0, 7.0]),
+    ),
+    "reindex_fill_value": (
+        lambda l, r, c: l.reindex([np.nan, 3.0, 7.0], fill_value=0.0),
+        lambda l, r, c: l.reindex([np.nan, 3.0, 7.0], fill_value=0.0),
+    ),
+    "compare": (
+        lambda l, r, c: _flat_compare(l, c),
+        lambda l, r, c: l.compare(c),
+    ),
+    "combine_first": (
+        lambda l, r, c: l.combine_first(r),
+        lambda l, r, c: l.combine_first(r),
+    ),
+}
+for _join in ("outer", "inner", "left", "right"):
+    for _fill in (None, 0.0):
+        for _side in (0, 1):
+            _NAN_LABEL_OPS[f"align_{_join}_fill{_fill}_{_side}"] = (
+                lambda l, r, c, j=_join, f=_fill, s=_side:
+                    l.align(r, join=j, fill_value=f)[s],
+                lambda l, r, c, j=_join, f=_fill, s=_side:
+                    l.align(r, join=j, fill_value=f)[s],
+            )
+
+
+def _nan_label_norm(pdf):
+    out = pdf.sort_index(axis=1).sort_index(na_position="last")
+    out.index = out.index.astype("float64")
+    return out.astype("float64")
+
+
+@pytest.mark.parametrize("op", sorted(_NAN_LABEL_OPS))
+def test_two_frame_ops_align_nan_labels_like_pandas(spark, op):
+    """Every two-frame label op matches pandas on a NaN index label: the
+    NaN row aligns with the other side's NaN row (one row, not two, not
+    dropped, not blanked), through the one null-safe key join."""
+    pd_op, es_op = _NAN_LABEL_OPS[op]
+
+    def _edf(pdf):
+        return EDF(spark.createDataFrame(pdf.reset_index()), index_cols=("k",))
+
+    frames = (_NAN_IDX_L, _NAN_IDX_R, _NAN_IDX_C)
+    exp = pd_op(*frames)
+    got = es_op(*[_edf(p) for p in frames])
+    if not isinstance(got, pd.DataFrame):
+        got = got.to_pandas(set_index=True)
+    pd.testing.assert_frame_equal(
+        _nan_label_norm(got), _nan_label_norm(exp), check_names=False
+    )
+
+
+def test_frame_builds_key_joins_in_one_function():
+    """frame.py builds label-join conditions in exactly one function:
+    ``_key_join`` is the only function that hands ``eqNullSafe`` to a
+    Spark join, and the only other joins in the module are the
+    position/match joins of reindex(method=) and take, which join on a
+    computed key, not on two frames' labels."""
+    import ast
+    from pathlib import Path
+
+    import eland_spark.frame as frame_mod
+
+    calls: dict[str, set[str]] = {"join": set(), "eqNullSafe": set()}
+
+    def _visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            name = child.name if isinstance(child, ast.FunctionDef) else fn
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in calls
+                and not isinstance(child.func.value, ast.Constant)
+            ):
+                calls[child.func.attr].add(name)
+            _visit(child, name)
+
+    _visit(ast.parse(Path(frame_mod.__file__).read_text()), None)
+    assert calls["join"] == {
+        "_key_join", "_reindex_rows", "_reindex_rows_fold", "take"
+    }
+    assert calls["join"] & calls["eqNullSafe"] == {"_key_join"}

@@ -18,25 +18,18 @@ import os
 import sys
 import time
 
+from perfbench.harness import read_steal
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("PROFILE_RUNS", "2"))
 
 
-def _cpu_stat() -> "tuple[int, int]":
-    """(steal_ticks, total_ticks) from /proc/stat — this VM has bursty
-    hypervisor steal (CLAUDE.md r4/r5 evidence) and a timing taken
-    during a burst is garbage; every measurement below carries the
-    steal%% observed across it so bursts are VISIBLE instead of
-    silently poisoning A/B comparisons."""
-    with open("/proc/stat") as f:
-        vals = list(map(int, f.readline().split()[1:]))
-    steal = vals[7] if len(vals) > 7 else 0
-    return steal, sum(vals)
-
-
 def _steal_pct(before: "tuple[int, int]") -> float:
+    """Hypervisor steal share (%) since a :func:`read_steal` sample; a
+    timing taken during a steal burst is garbage, so every measurement
+    below carries the steal it saw."""
     s0, t0 = before
-    s1, t1 = _cpu_stat()
+    s1, t1 = read_steal()
     return round(100.0 * (s1 - s0) / max(1, t1 - t0), 2)
 
 
@@ -63,7 +56,7 @@ def main() -> None:
     results = {}
     for name in names:
         fn = queries[name]
-        cpu0 = _cpu_stat()
+        cpu0 = read_steal()
         t0 = time.perf_counter()
         df = fn(spark, SF_DIR)
         t_build = time.perf_counter() - t0
@@ -78,7 +71,7 @@ def main() -> None:
         best = None
         best_steal = None
         for _ in range(RUNS):
-            c0 = _cpu_stat()
+            c0 = read_steal()
             t0 = time.perf_counter()
             d2 = fn(spark, SF_DIR)
             d2.write.format("noop").mode("overwrite").save()
