@@ -2593,29 +2593,34 @@ class DataFrame:
         axis=0). One null-safe index equi-join (:func:`_key_join`) +
         ONE aggregation pass (every F.corr is a map-side-combinable
         streaming agg) — a single scan of each side at any scale; the
-        result is column-count sized."""
+        result is column-count sized. Like pandas, the result lists the
+        shared numeric columns (in this frame's order), then every other
+        numeric column of either frame, sorted, as NaN."""
         icols = self._aligned_index(other, "corrwith")
-        theirs = {f.display_name for f in other._schema.fields if f.is_numeric}
-        shared = [
-            f.display_name for f in self._schema.fields
-            if f.is_numeric and f.display_name in theirs
-            and f.display_name not in icols
-        ]
-        if not shared:
-            return pd.Series(dtype="float64")
-        joined = _key_join(
-            self._keyed(icols, shared, "__l_{}__"),
-            other._keyed(icols, shared, "__r_{}__"),
-            icols,
-        )
-        row = joined.agg(
-            *[F.corr(F.col(f"__l_{c}__").cast("double"),
-                     F.col(f"__r_{c}__").cast("double")).alias(c)
-              for c in shared]
-        ).collect()[0]
-        return pd.Series(
-            {c: (float("nan") if row[c] is None else row[c]) for c in shared}
-        )
+
+        def _numeric(frame):
+            return [
+                f.display_name for f in frame._schema.fields
+                if f.is_numeric and f.display_name not in icols
+            ]
+
+        mine, theirs = _numeric(self), _numeric(other)
+        shared = [c for c in mine if c in theirs]
+        rest = sorted(set(mine + theirs).difference(shared))
+        out = dict.fromkeys(shared + rest, float("nan"))
+        if shared:
+            joined = _key_join(
+                self._keyed(icols, shared, "__l_{}__"),
+                other._keyed(icols, shared, "__r_{}__"),
+                icols,
+            )
+            row = joined.agg(
+                *[F.corr(F.col(f"__l_{c}__").cast("double"),
+                         F.col(f"__r_{c}__").cast("double")).alias(c)
+                  for c in shared]
+            ).collect()[0]
+            out.update((c, row[c]) for c in shared if row[c] is not None)
+        return pd.Series(out, dtype="float64")
 
     def copy(self, deep: bool = True) -> "DataFrame":
         """Frames are immutable lazy plans; copy returns a new façade

@@ -98,11 +98,13 @@ def _rank_pass(
         .cache()
     )
     pid = F.shiftright(F.col("__mid__"), 33)
-    stats = (
+    # at most partitions x extra-key rows: sorted here, not by a Spark
+    # range sort (which would cost a sampling job and a range exchange)
+    stats = sorted(
         src.groupBy(pid.alias("__b__"), *extra_keys)
         .agg(F.count(F.lit(1)).alias("__cnt__"), *agg_cols)
-        .orderBy("__b__")
-        .collect()
+        .collect(),
+        key=lambda r: r["__b__"],
     )
     bucket_counts: dict[int, int] = {}
     for r in stats:

@@ -266,3 +266,20 @@ def metric_total(df: DataFrame, metric: str, node: str | None = None) -> int:
             if metric.lower() in name.lower() and value > 0:
                 total += value
     return total
+
+
+def codegen_stats(spark) -> dict:
+    """JVM-wide Janino compile totals since the JVM started:
+    ``{"compiles", "compile_ms"}``. ``compiles`` counts every generated
+    class Spark compiled (Spark's ``CodegenMetrics`` compilation-time
+    histogram); ``compile_ms`` is the time spent compiling them
+    (``CodeGenerator.compileTime``). A cache hit compiles nothing, so
+    the difference of two readings around a query is the number of
+    classes it had to (re)compile. A repeated query that compiles
+    again either lost its classes to cache eviction
+    (``spark.sql.codegen.cache.maxEntries``, set by ``get_session``) or
+    generates code that differs from run to run."""
+    jvm = spark.sparkContext._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return {"compiles": int(hist.getCount()), "compile_ms": nanos / 1e6}

@@ -11,6 +11,7 @@ per-document script evaluation).
 
 from __future__ import annotations
 
+import math
 import re
 from typing import TYPE_CHECKING, Any
 
@@ -599,6 +600,12 @@ class Series:
         row = self._frame._sdf.agg(expr.alias("v")).collect()[0]
         return row["v"]
 
+    def _agg_stat(self, expr: Column) -> float:
+        """A moment statistic as a float, NaN where Spark gives null
+        (too few observations), like pandas."""
+        v = self._agg_scalar(expr)
+        return float("nan") if v is None else float(v)
+
     def _numeric_expr(self) -> Column:
         """Boolean series aggregate as ints under pandas semantics
         (the reference casts bool agg results back,
@@ -623,37 +630,37 @@ class Series:
         return self._agg_scalar(F.count(self._expr))
 
     def std(self):
-        return self._agg_scalar(F.stddev_samp(self._numeric_expr()))
+        return self._agg_stat(F.stddev_samp(self._numeric_expr()))
 
     def var(self):
-        return self._agg_scalar(F.var_samp(self._numeric_expr()))
+        return self._agg_stat(F.var_samp(self._numeric_expr()))
 
     def sem(self, ddof: int = 1):
-        """Standard error of the mean: sample std / sqrt(count), in ONE
+        """Standard error of the mean: std(ddof) / sqrt(count), in ONE
         aggregate pass (pandas parity; the frame-level ``sem`` computes
-        the same per column)."""
+        the same per column). NaN when count <= ddof."""
         row = self._frame._sdf.agg(
             F.stddev_samp(self._numeric_expr()).alias("s"),
             F.count(self._numeric_expr()).alias("n"),
         ).collect()[0]
-        if row["s"] is None or row["n"] - ddof <= 0:
-            return None
-        import math
-
-        # stddev_samp is ddof=1; rescale for other ddof
-        var1 = row["s"] ** 2 * (row["n"] - 1)
-        return math.sqrt(var1 / (row["n"] - ddof)) / math.sqrt(row["n"])
+        n = row["n"]
+        if n - ddof <= 0:
+            return float("nan")
+        # stddev_samp is ddof=1 (NaN on one row); rescale its sum of
+        # squared deviations for other ddof
+        m2 = row["s"] ** 2 * (n - 1) if n > 1 else 0.0
+        return math.sqrt(m2 / (n - ddof)) / math.sqrt(n)
 
     def skew(self):
         """Sample-adjusted Fisher-Pearson skewness (pandas G1) — shares
         the frame-level agg expression (one scalar aggregate)."""
-        return self._agg_scalar(
+        return self._agg_stat(
             self._frame._AGG_EXPRS["skew"](self._numeric_expr())
         )
 
     def kurt(self):
         """Sample-adjusted excess kurtosis (pandas G2)."""
-        return self._agg_scalar(
+        return self._agg_stat(
             self._frame._AGG_EXPRS["kurt"](self._numeric_expr())
         )
 
@@ -698,7 +705,7 @@ class Series:
             raise NotImplementedError(
                 "method must be 'pearson' or 'spearman'"
             )
-        return self._agg_scalar(
+        return self._agg_stat(
             F.corr(self._numeric_expr(), self._other(other).cast("double"))
         )
 
@@ -708,7 +715,7 @@ class Series:
         fn = F.covar_samp if ddof == 1 else F.covar_pop
         if ddof not in (0, 1):
             raise ValueError("ddof must be 0 or 1")
-        return self._agg_scalar(
+        return self._agg_stat(
             fn(self._numeric_expr(), self._other(other).cast("double"))
         )
 

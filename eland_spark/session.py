@@ -43,6 +43,20 @@ def get_session(
     "true"}``; PySpark reads the setting once per process (on the first
     wrapped call with an active session) and caches it, so it must be
     set on the first session the process builds.
+
+    Spark's generated-code cache (``spark.sql.codegen.cache.maxEntries``)
+    holds 4096 classes here, not Spark's 100. One pass over every
+    ``queries()`` entry generates about 3,100 distinct classes, and one
+    curation round (spearman, train_classifier, dsir_select,
+    label_propagation) about 190, so at 100 entries each round evicted
+    every class before its next use and recompiled it with Janino (about
+    14 ms a class on 4 cores). At 4096 a repeated query compiles
+    nothing; the cost is metaspace, about 60 MB more with the whole
+    engine's classes resident. ``plans.inspect.codegen_stats`` reads the
+    JVM's compile counter. It is a static conf: Spark reads it once per
+    JVM, when the code generator first starts, so a different bound
+    (through ``extra_conf``) must also be set on the first session the
+    process builds.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -58,6 +72,7 @@ def get_session(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     if master is not None:
         builder = builder.master(master)

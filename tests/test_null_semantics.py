@@ -217,8 +217,8 @@ _NAN_LABEL_OPS = {
         lambda l, r, c: l.update(r, overwrite=False),
     ),
     "corrwith": (
-        # pandas also lists the unshared columns, as NaN
-        lambda l, r, c: pd.DataFrame([l.corrwith(r)[["x"]]]),
+        # every column of either frame: the unshared ones as NaN
+        lambda l, r, c: pd.DataFrame([l.corrwith(r)]),
         lambda l, r, c: pd.DataFrame([l.corrwith(r)]),
     ),
     "concat_axis1": (

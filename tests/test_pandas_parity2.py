@@ -34,6 +34,40 @@ def test_series_sem_corr_cov(num):
     )
 
 
+_DEGENERATE_STATS = {
+    "std": lambda x, y: x.std(),
+    "var": lambda x, y: x.var(),
+    "sem": lambda x, y: x.sem(),
+    "sem_ddof0": lambda x, y: x.sem(ddof=0),
+    "skew": lambda x, y: x.skew(),
+    "kurt": lambda x, y: x.kurt(),
+    "corr": lambda x, y: x.corr(y),
+    "cov": lambda x, y: x.cov(y),
+    "cov_ddof0": lambda x, y: x.cov(y, ddof=0),
+}
+
+
+@pytest.mark.parametrize("n", [0, 1, 2])
+@pytest.mark.parametrize("stat", sorted(_DEGENERATE_STATS))
+def test_series_stats_on_degenerate_inputs_match_pandas(spark, stat, n):
+    """Too few observations give NaN, like pandas, never None."""
+    pdf = pd.DataFrame(
+        {"k": [1, 2][:n], "x": [1.0, 4.0][:n], "y": [3.0, 2.0][:n]}
+    )
+    edf = es.DataFrame(
+        spark.createDataFrame(pdf, "k bigint, x double, y double"),
+        index_cols=("k",),
+    )
+    fn = _DEGENERATE_STATS[stat]
+    got = fn(edf["x"], edf["y"])
+    exp = fn(pdf["x"], pdf["y"])
+    assert isinstance(got, float), got
+    if np.isnan(exp):
+        assert np.isnan(got)
+    else:
+        assert got == pytest.approx(exp, rel=1e-12)
+
+
 def test_series_autocorr(num):
     edf, pdf = num
     got = edf["o_totalprice"].autocorr(2)

@@ -3,7 +3,10 @@
 (includes codegen), (c) steady-state execution (min of N more runs),
 and counts Spark jobs/stages/tasks triggered by one execution — the
 job-wave number that dominates small-scale latency for iterative
-plans.
+plans — and the Janino compiles of the first execution and of the
+fastest steady-state run (``plans.inspect.codegen_stats``; a steady
+run that still compiles is recompiling evicted or literal-specific
+classes).
 
     python tools_profile_query.py simhash_near_dup dup_spans ...
 
@@ -18,6 +21,7 @@ import os
 import sys
 import time
 
+from eland_spark.plans.inspect import codegen_stats
 from perfbench.harness import read_steal
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -62,28 +66,36 @@ def main() -> None:
         t_build = time.perf_counter() - t0
 
         jobs_before = set(tracker.getJobIdsForGroup(None) or [])
+        cg0 = codegen_stats(spark)["compiles"]
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         t_first = time.perf_counter() - t0
+        first_compiles = codegen_stats(spark)["compiles"] - cg0
         jobs_after = set(tracker.getJobIdsForGroup(None) or [])
         n_jobs = len(jobs_after - jobs_before)
 
         best = None
         best_steal = None
+        best_compiles = None
         for _ in range(RUNS):
             c0 = read_steal()
+            cg0 = codegen_stats(spark)["compiles"]
             t0 = time.perf_counter()
             d2 = fn(spark, SF_DIR)
             d2.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             if best is None or dt < best:
-                best, best_steal = dt, _steal_pct(c0)
+                best, best_steal, best_compiles = (
+                    dt, _steal_pct(c0), codegen_stats(spark)["compiles"] - cg0
+                )
 
         results[name] = {
             "build_s": round(t_build, 3),
             "first_exec_s": round(t_first, 3),
             "steady_total_s": round(best, 3),
             "jobs_per_exec": n_jobs,
+            "first_exec_compiles": first_compiles,
+            "steady_compiles": best_compiles,
             "steal_pct": _steal_pct(cpu0),
             "steady_steal_pct": best_steal,
         }
